@@ -23,9 +23,12 @@ Scale notes:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.scans import (
     BLOCKS_JSONL,
@@ -556,8 +559,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints labels every few rounds to cut lineage and uses
     large-star/small-star to reduce rounds — noted, not needed at
     fixture diameter. The loop is driver-side CONTROL FLOW only; all
-    data stays on executors (the one count() per round is the
-    convergence check)."""
+    data stays on executors (the changed count observed on each
+    checkpoint is the convergence check)."""
     raw = read_blocks_json(spark)
     txio = (
         raw.select(F.explode("txs").alias("tx"))
@@ -592,200 +595,54 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("addr", F.xxhash64("addr").alias("label"))
         .localCheckpoint()
     )
-    labels, _ = label_propagate(
+    labels = label_propagate(
         sym, labels, max_iter=50, require_converged=True
-    )
+    ).state
     return labels.groupBy("label").agg(
         F.count("*").alias("component_size"),
         F.min("addr").alias("representative"),
     ).select("component_size", "representative")
 
 
-_ROWS_PER_PART = 2_000_000  # target adjacency rows per cached partition
-# Run the hub census only when the adjacency exceeds one partition
-# target: below it no single dst can dominate a full-sized partition,
-# and the census pass would be pure fixed cost (measured ~1 s on the
-# small fixture graphs). Tests lower it to force the salted branch.
-_HUB_CENSUS_MIN_ROWS = _ROWS_PER_PART
-_LAST_HUBS: list = []  # test observability: hubs salted by the last call
-
-
 def label_propagate(sym, labels, max_iter: int = 20, require_converged: bool = False):
-    """Min-label propagation with convergence early-exit.
+    """Min-label propagation with convergence early-exit, on the
+    ``iterate`` primitive (ingest/iterate.py).
 
-    Round-15 layout: the adjacency is materialized ONCE, partitioned
-    by ``dst`` and widened with one self-loop per labelled node.  Each
-    round is then a single join + a single min-aggregate:
+    The adjacency is ``sym`` widened with one self-loop per labelled
+    node, cached ONCE (joined on ``dst``, hub-salted when skewed).
+    Each round is a single join + a single min-aggregate on src: the
+    self-loop row carries the node's OWN label through the same
+    aggregate, so ``min(label)`` over the group IS the new label
+    (``least(own, neighbor-min)``), and srcs outside the label set (no
+    self-loop ⇒ own IS NULL) are dropped.  Only the |V|-row label
+    frame moves per round, never the edge set.
 
-    - the adjacency is ``repartition(n, "dst").persist()`` — persist,
-      NOT localCheckpoint, deliberately: a localCheckpointed
-      LogicalRDD of an AQE plan reports UnknownPartitioning (measured:
-      the round join re-shuffled the edge set every round), while a
-      cached plan keeps its output partitioning
-      (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-      is false by default), so the join key (``dst``) matches the
-      cached partitioning and the edge set is shuffled exactly ONCE
-      per propagation — only the |V|-row label frame moves per round
-      (guide §2.4: operations keyed the same way share one exchange);
-    - ``n`` is scale-adaptive, derived from the measured adjacency row
-      count (~2M rows ≈ 50–100 MB per partition) and capped by the
-      session's ``spark.sql.shuffle.partitions`` (the production
-      parallelism knob): AQE cannot re-coalesce a cached plan without
-      losing the reusable partitioning (measured: with
-      ``canChangeCachedPlanOutputPartitioning=true`` the round join
-      re-grew an Exchange over the cache), so the count-derived ``n``
-      plays AQE's role — fixture graphs land on 2 partitions (no
-      32-empty-task scheduling per round), a 100 TB graph lands on the
-      conf'd parallelism.  The count reads the already-materialized
-      checkpoint blocks, so it costs no extra pass over the lineage;
-    - the self-loop row carries the node's OWN label through the same
-      aggregate, so ``min(label)`` over the group IS the new label
-      (``least(own, neighbor-min)``) and the old ``labels ⋈
-      neighbor_min`` join per round disappears outright; srcs outside
-      the label set (no self-loop ⇒ own IS NULL) are dropped exactly
-      as the old left-join form dropped them;
-    - the changed flag (labels only ever DECREASE, so changed ⟺
-      new < own) rides the checkpointed frame, keeping the convergence
-      probe a limit-1 scan of already-materialized blocks.
-
-    Net per round: ONE |V|-row label shuffle + the src-keyed aggregate
-    exchange (map-side partial min reduces it to ~|V| rows) instead of
-    the old three |E|-scale exchanges (edge re-shuffle + agg + label
-    re-join).  Rounds run in PAIRS per checkpoint: the mid round stays
-    lazy inside the second round's lineage (no driver scalar feeds
-    between rounds), so each loop pass is one materialization job +
-    one probe for two propagation rounds — the fixpoint is unique, so
-    the labels are bit-identical to the one-round-per-job form, and
-    convergence detected on the pair's second round alone is exact
-    because labels only decrease.  ``max_iter`` keeps bounding the
-    ROUND count (callers pass even bounds).  localCheckpoint per round truncates the otherwise
-    unbounded iterative lineage, as before; the cached adjacency is
-    unpersisted before returning (the returned label frame is already
-    checkpoint-materialized, so it cannot trigger recompute).
-
-    Skew (guide §2.5): the cached partitioning is fixed, so AQE cannot
-    skew-split the round join — round-16 implements the mitigation
-    directly: a one-pass hub census over the materialized adjacency
-    (the same pass that sizes the partition count) detects dsts whose
-    edge rows exceed half a target partition and splits their rows
-    across ``n_parts`` deterministic salt buckets, with the label side
-    replicating ONLY hub addrs across the salt range; non-hub graphs
-    (every fixture) take the unsalted branch and keep the r15 plan
-    byte-identical.  Referee: tests/test_round16_ops.py plants a
-    one-dst-holds-half-the-edges graph, asserts the census fires and
-    the labels are bit-identical to the unsalted form.
+    Rounds run in PAIRS per checkpoint (no scalar read back feeds the
+    next round): the fixpoint is unique, so the labels are bit-identical to
+    the one-round-per-job form, and convergence detected on the pair's
+    second round alone is exact because labels only decrease (changed
+    ⟺ new < own).  The changed count is an Observation on the pair's
+    checkpoint job: a pair is three jobs on small graphs (two label
+    broadcasts, the checkpoint) and five on large ones (two label and
+    two aggregate exchanges, the checkpoint), with no convergence
+    probe.  ``max_iter`` bounds the ROUND count and must be even
+    (ValueError otherwise).
 
     ``require_converged=True`` raises RuntimeError if the bound is hit
     with labels still changing — callers whose oracle is a FULL
     transitive closure (dedup_clusters, graph_components) must fail
     loudly rather than hand back unconverged labels that silently
-    hash-mismatch.
+    hash-mismatch.  Skew referee: tests/test_round16_ops.py.
 
-    Returns ``(labels, rounds_run)`` so callers/tests can observe that
-    convergence beat the bound.
+    Returns the ``Iteration`` record: ``state`` = (addr, label),
+    ``rounds_run``, and the salted ``hubs``.
     """
-    assert max_iter % 2 == 0, (
-        "label_propagate runs rounds in pairs; pass an even max_iter "
-        f"(got {max_iter})"
+    adjacency = sym.select("src", "dst").unionAll(
+        labels.select(F.col("addr").alias("src"), F.col("addr").alias("dst"))
     )
-    adj_raw = (
-        sym.select("src", "dst")
-        .unionAll(
-            labels.select(
-                F.col("addr").alias("src"), F.col("addr").alias("dst")
-            )
-        )
-        .localCheckpoint()
-    )
-    n_default = int(
-        adj_raw.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    total = adj_raw.count()
-    # floor 2, not 1: repartition(1, col) plans as SinglePartition
-    # (not HashPartitioning), which EnsureRequirements will not reuse
-    # — measured: both join sides re-grew ENSURE_REQUIREMENTS
-    # exchanges.  At n >= 2 the cached HashPartitioning is reused and
-    # the round join has NO exchange over the adjacency.
-    n_parts = max(2, min(n_default, -(-total // _ROWS_PER_PART)))
-    # Hub salting (guide §2.5; VERDICT r15 #5): the cached fixed
-    # partitioning is outside AQE skew-split reach, so a hub ``dst``
-    # holding a large share of the edges would pin one partition (and
-    # one task per round) to that share.  Skew only matters once a
-    # single dst can dominate a FULL-SIZED partition, so the census
-    # (one groupBy-dst pass over the materialized blocks) runs only
-    # when the adjacency exceeds one partition target — fixture-sized
-    # graphs skip it outright and keep the r15 cost/plan byte-
-    # identical (an unconditional census A/B'd ~1 s slower on the
-    # small dedup_clusters graph).  A dst is a hub when its edge rows
-    # alone exceed half a target partition; hub rows are split across
-    # ``n_parts`` salt buckets by a deterministic hash of ``src``
-    # (never rand() — SPARK-38388 retry safety) and the label side
-    # replicates ONLY the hub addrs across the salt range, so the
-    # per-round label shuffle stays ~|V| rows.  The bounded
-    # ``limit(64)`` keeps the driver collect O(1): salting the top-64
-    # hubs removes the pathological partitions; a graph with more
-    # mega-hubs degrades gracefully to unsalted behavior for the rest.
-    hubs: list = []
-    if total >= _HUB_CENSUS_MIN_ROWS:
-        hub_threshold = max(64, -(-total // n_parts) // 2)
-        hubs = [
-            r["dst"]
-            for r in adj_raw.groupBy("dst")
-            .agg(F.count("*").alias("c"))
-            .filter(F.col("c") > hub_threshold)
-            .orderBy(F.col("c").desc(), F.col("dst"))
-            .limit(64)
-            .collect()
-        ]
-    # test hook: the skew referee (tests/test_round16_ops.py) asserts
-    # the census actually fired on its planted hub fixture
-    global _LAST_HUBS
-    _LAST_HUBS = list(hubs)
-    if hubs:
-        salt = (
-            F.when(
-                F.col("dst").isin(hubs),
-                F.pmod(F.xxhash64("src"), F.lit(n_parts)),
-            )
-            .otherwise(F.lit(0))
-            .cast("int")
-        )
-        adj = (
-            adj_raw.select("src", "dst", salt.alias("salt"))
-            .repartition(n_parts, "dst", "salt")
-            .persist()
-        )
-    else:
-        adj = adj_raw.repartition(n_parts, "dst").persist()
 
-    def _round(frame):
-        """One min-label propagation round over the cached adjacency:
-        (addr, label, changed) for every labelled node.  `changed`
-        compares against the node's own incoming label (the self-loop
-        row), so it is exact per round.  Under salting the label frame
-        replicates hub addrs across the salt range and the join keys
-        on (dst, salt) — each adjacency row still matches EXACTLY one
-        label row, so the joined multiset (and therefore the min-agg)
-        is identical to the unsalted form."""
-        if hubs:
-            fr = frame.select(
-                "addr",
-                "label",
-                F.explode(
-                    F.when(
-                        F.col("addr").isin(hubs),
-                        F.sequence(F.lit(0), F.lit(n_parts - 1)),
-                    ).otherwise(F.array(F.lit(0)))
-                ).alias("salt"),
-            )
-            joined = adj.join(
-                fr.hint("shuffle_hash"),
-                (adj.dst == fr.addr) & (adj.salt == fr.salt),
-            )
-        else:
-            joined = adj.join(
-                frame.hint("shuffle_hash"), adj.dst == frame.addr
-            )
+    def step(frame, adj, prev, r):
+        joined = adj.join(frame.select("addr", "label"), "addr")
         return (
             joined.groupBy("src")
             .agg(
@@ -802,36 +659,20 @@ def label_propagate(sym, labels, max_iter: int = 20, require_converged: bool = F
             )
         )
 
-    iters = 0
-    converged = False
-    # TWO rounds per materialization: no driver-side scalar feeds
-    # between rounds (unlike pagerank's dangling-mass literal), so the
-    # mid round can stay lazy inside the second round's lineage — one
-    # checkpoint job + one convergence probe per PAIR of rounds, i.e.
-    # half the per-round job overhead and half the checkpoint
-    # materializations/disk writes at scale.  The fixpoint is unique
-    # (min-label propagation is monotone), so labels are bit-identical
-    # to the one-round-per-job form; convergence is detected on the
-    # SECOND round of the pair (labels only decrease, so "round 2
-    # changed nothing" alone proves the fixpoint, whatever round 1
-    # did).  `iters` keeps counting ROUNDS (2 per loop pass) so the
-    # max_iter bound and the observable round count keep their
-    # meaning.
-    for _ in range(0, max_iter, 2):
-        iters += 2
-        mid = _round(labels).select("addr", "label")
-        new_full = _round(mid).localCheckpoint()
-        labels = new_full.select("addr", "label")
-        if new_full.filter(F.col("changed")).limit(1).count() == 0:
-            converged = True
-            break
-    adj.unpersist()
-    if require_converged and not converged:
-        raise RuntimeError(
-            f"label propagation did not converge within {max_iter} rounds; "
-            "raise max_iter (component diameter exceeds the bound)"
-        )
-    return labels, iters
+    run = iterate(
+        labels,
+        step,
+        max_iter,
+        scalars={"changed": F.count_if(F.col("changed"))},
+        until=lambda seen: seen["changed"] == 0,
+        adjacency=adjacency,
+        key="dst",
+        to="src",
+        salt_on="src",
+        pairs=True,
+        require_converged=require_converged,
+    )
+    return replace(run, state=run.state.select("addr", "label"))
 
 
 @query(
@@ -1055,14 +896,7 @@ def sink_cassandra(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGERANK_SCALE = 10**12
 
 
-def _pagerank_oracle_sql(iters: int = 10) -> str:
-    """Exact DuckDB oracle for the quantized PageRank: the 10 rounds
-    unroll into 10 chained CTE hops (the graph_katz_bounded w1/w2/w3
-    precedent, generated by loop instead of by hand).  Every quantity
-    is BIGINT and every division is integer, so the oracle reproduces
-    the Spark result bit-for-bit — no float-summation-order slack."""
-    s = PAGERANK_SCALE
-    sql = f"""
+_DUCK_FLOW_GRAPH = f"""
     WITH txio AS (
         SELECT (tx).tx_hash AS tx_hash, (tx).inputs AS inputs,
                (tx).outputs AS outputs
@@ -1079,16 +913,13 @@ def _pagerank_oracle_sql(iters: int = 10) -> str:
         WHERE src <> dst
     ), nodes AS MATERIALIZED (
         SELECT src AS node FROM edges UNION SELECT dst FROM edges
-    ), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
-    ), outdeg AS MATERIALIZED (
-        SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
-        FROM edges GROUP BY src
-    ), pr0 AS MATERIALIZED (
-        SELECT node, CAST({s} // (SELECT n FROM nn) AS BIGINT) AS r
-        FROM nodes
     )"""
-    for i in range(1, iters + 1):
-        sql += f""", contrib{i} AS MATERIALIZED (
+
+
+def _pagerank_round_sql(i: int, update: str) -> str:
+    """Round ``i`` of the unrolled PageRank oracles: in-edge contribs
+    and dangling mass of pr{i-1}, then pr{i} by ``update``."""
+    return f""", contrib{i} AS MATERIALIZED (
         SELECT e.dst AS node, CAST(SUM(p.r // d.deg) AS BIGINT) AS contrib
         FROM edges e
         JOIN pr{i - 1} p ON p.node = e.src
@@ -1098,17 +929,61 @@ def _pagerank_oracle_sql(iters: int = 10) -> str:
         SELECT CAST(COALESCE(SUM(p.r), 0) AS BIGINT) AS d
         FROM pr{i - 1} p LEFT JOIN outdeg o ON o.node = p.node
         WHERE o.node IS NULL
-    ), pr{i} AS MATERIALIZED (
+    ), pr{i} AS MATERIALIZED ({update}
+    )"""
+
+
+def _pagerank_oracle_sql(iters: int = 10) -> str:
+    """Exact DuckDB oracle for the quantized PageRank: the 10 rounds
+    unroll into 10 chained CTE hops (``unrolled_cte``).  Every
+    quantity is BIGINT and every division is integer, so the oracle
+    reproduces the Spark result bit-for-bit — no float-summation-order
+    slack."""
+    s = PAGERANK_SCALE
+    head = _DUCK_FLOW_GRAPH + f""", nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
+    ), outdeg AS MATERIALIZED (
+        SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
+        FROM edges GROUP BY src
+    ), pr0 AS MATERIALIZED (
+        SELECT node, CAST({s} // (SELECT n FROM nn) AS BIGINT) AS r
+        FROM nodes
+    )"""
+    return unrolled_cte(
+        head,
+        lambda i: _pagerank_round_sql(i, f"""
         SELECT n.node,
                CAST(3 * {s} // (20 * (SELECT n FROM nn))
                     + 17 * (COALESCE(c.contrib, 0)
                             + (SELECT d FROM dang{i})
                               // (SELECT n FROM nn)) // 20
                     AS BIGINT) AS r
-        FROM nodes n LEFT JOIN contrib{i} c ON c.node = n.node
-    )"""
-    sql += f"\n    SELECT node AS addr, r AS rank_e12 FROM pr{iters}"
-    return sql
+        FROM nodes n LEFT JOIN contrib{i} c ON c.node = n.node"""),
+        iters,
+        f"\n    SELECT node AS addr, r AS rank_e12 FROM pr{iters}",
+    )
+
+
+def flow_edges(spark: SparkSession) -> DataFrame:
+    """Distinct directed (src, dst) value-flow edges of the address
+    graph: every input address of a non-coinbase tx to each of its
+    output addresses, self-loops dropped.  The input × output pairs
+    are generated inside each tx row (two explodes), not by joining
+    exploded inputs to exploded outputs on tx_hash: the same pairs
+    whenever a hash names one tx content, minus the join's two
+    exchanges."""
+    return (
+        read_blocks_json(spark)
+        .select(F.explode("txs").alias("tx"))
+        .filter(~F.col("tx.coinbase"))
+        .select(F.explode("tx.inputs").alias("i"), "tx.outputs")
+        .select(
+            F.col("i.address")[0].alias("src"),
+            F.explode("outputs").alias("o"),
+        )
+        .select("src", F.col("o.address")[0].alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
 
 
 @query("graph_pagerank", _pagerank_oracle_sql())
@@ -1118,69 +993,25 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence exit, see pagerank_iterate) alongside
     graph_components' label propagation.
 
-    EXACT ORACLE (round 9, retired from rows-only): ranks are carried
-    as bigint e12 units and every per-round operation is integer —
-    share(src) = r DIV deg, new = 3·S DIV 20n + 17·(contrib + D DIV n)
-    DIV 20 with damping 0.85 = 17/20 exact.  Integer sums are
-    order-independent, so the 10-hop unrolled DuckDB CTE
-    (_pagerank_oracle_sql) reproduces the distributed result
-    bit-for-bit; the e12 quantization error vs true float PageRank is
-    ≤ iters·(1+damping)·1e-12 per node — far below any ranking use.
-    tests/test_llm.py cross-checks every rank against a driver-side
+    EXACT ORACLE (round 9, retired from rows-only): every per-round
+    operation is integer (pagerank_iterate), so the 10-hop unrolled
+    DuckDB CTE (_pagerank_oracle_sql) reproduces the distributed
+    result bit-for-bit; the e12 quantization error vs true float
+    PageRank is ≤ iters·(1+damping)·1e-12 per node — far below any
+    ranking use.  tests/test_llm.py cross-checks every rank against a
     numpy integer simulation on the identical edge list.
-
-    Scale: each round is one ranks⋈edges shuffle join on src plus a
-    sum-aggregate on dst — partial aggregation makes the shuffle carry
-    |dst-partitions| partials, and localCheckpoint truncates the
-    per-round lineage exactly as in graph_components. Dangling mass
-    (sinks) is a scalar agg broadcast back into the update, so the
-    ranks stay a proper distribution every round — no mass leak, which
-    at web scale is the difference between converging and drifting."""
-    raw = read_blocks_json(spark)
-    txio = (
-        raw.select(F.explode("txs").alias("tx"))
-        .filter(~F.col("tx.coinbase"))
-        .select("tx.tx_hash", "tx.inputs", "tx.outputs")
-    )
-    ins = txio.select("tx_hash", F.explode("inputs").alias("i")).select(
-        "tx_hash", F.col("i.address")[0].alias("src")
-    )
-    outs = txio.select("tx_hash", F.explode("outputs").alias("o")).select(
-        "tx_hash", F.col("o.address")[0].alias("dst")
-    )
-    edges = (
-        ins.join(outs, "tx_hash")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("addr"))
-        .union(edges.select(F.col("dst").alias("addr")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks, _ = pagerank_iterate(nodes, edges, out_deg, n, max_iter=10)
-    return ranks.select(
-        "addr", F.col("rank_e12").cast("bigint").alias("rank_e12")
-    )
+    Dangling mass (sinks) is spread uniformly every round, so the
+    ranks stay a proper distribution — no mass leak."""
+    return pagerank_iterate(flow_edges(spark), max_iter=10).state
 
 
-def pagerank_iterate(
-    nodes,
-    edges,
-    out_deg,
-    n: int,
-    max_iter: int = 10,
-    tol: int = 0,
-):
-    """Quantized damped power iteration with an L1-delta early-exit.
+def pagerank_iterate(edges, max_iter: int = 10, tol: int = 0, teleport=None):
+    """Quantized damped power iteration with an L1-delta early-exit,
+    on the ``iterate`` primitive (ingest/iterate.py).
 
-    Ranks are bigint e12 units (PAGERANK_SCALE); damping 0.85 is the
-    exact rational 17/20, so the per-round update
+    ``edges`` are distinct directed (src, dst) pairs; the nodes are
+    their endpoints.  Ranks are bigint e12 units (PAGERANK_SCALE);
+    damping 0.85 is the exact rational 17/20, so the per-round update
 
         share(src)  = rank DIV deg(src)
         contrib(v)  = Σ share over in-edges
@@ -1188,87 +1019,107 @@ def pagerank_iterate(
 
     (D = dangling mass) is pure integer arithmetic: order-independent
     sums, no float drift, hence cross-engine exact vs the unrolled SQL
-    oracle.  Per round: contribs join+agg, a scalar dangling-mass agg,
-    the rank update, and one cheap per-node L1-delta agg.  When the
-    bigint delta drops to ``tol`` (default 0 = exact fixpoint) the
-    loop stops: an integer fixpoint is invariant under further rounds,
-    so the early exit returns output IDENTICAL to the full
-    ``max_iter`` unroll — each avoided round is a full ranks⋈edges
-    shuffle, which at 100× scale dominates the delta agg many times
-    over.  ``tol < 0`` disables the exit (referee use only).
+    oracle.  ``teleport`` (a boolean Column over ``addr``) personalizes
+    the walk: teleport and the dangling redirect go to the n nodes it
+    selects instead of all nodes, and the walk starts uniform on them.
 
-    Returns ``(ranks, rounds_run)`` with ranks = (addr, rank_e12).
+    Jobs: the edge list is checkpointed once (row count observed); one
+    aggregate over it gives every node its out-degree (NULL for sinks),
+    checkpointed with n and the dangling teleport count observed, so
+    the initial dangling mass needs no pass.  The adjacency (edges plus
+    one self-row per node) is cached once.  A round is ONE join + ONE
+    aggregate on dst — the self-row carries the node's own rank and
+    degree through it — and ONE checkpoint whose Observation returns
+    the next dangling mass and the L1 delta: two jobs per round on
+    small graphs (the rank broadcast, the checkpoint), three on large
+    ones (rank exchange, aggregate exchange, checkpoint).  At sf0.01
+    graph_pagerank runs 28 jobs per call, 127 with separate scalar
+    collects.  When the bigint delta drops to
+    ``tol`` (default 0 = exact fixpoint) the loop stops: an integer
+    fixpoint is invariant under further rounds, so the early exit
+    returns output IDENTICAL to the full ``max_iter`` unroll.
+    ``tol < 0`` disables the exit (referee use only).
+
+    Returns the ``Iteration`` record with ``state`` = (addr, rank_e12)
+    over every node (zero-rank nodes included).
     """
-    base = 3 * PAGERANK_SCALE // (20 * n)
-    # Round-15 loop restructure (guide §2.4): everything loop-invariant
-    # is hoisted and everything per-round rides the ONE checkpointed
-    # frame. edges⋈out_deg is joined once (not per round); the rank
-    # frame carries the static nullable out-degree, so the dangling
-    # mass (deg IS NULL ⟺ the old anti-join) and the L1 delta (carried
-    # as |new−old| per row) are limit-free scalar scans of the already
-    # materialized blocks instead of per-round joins. One shuffle join
-    # + one agg per round remain — the algorithmic floor. Identical
-    # integer math, identical early-exit rounds; measured ~6.7 →
-    # ~4.0 s on graph_pagerank at sf0.1.
-    rd = (
-        nodes.join(out_deg, nodes.addr == out_deg.src, "left")
+    edges, stats = checkpoint(edges.select("src", "dst"), rows=F.count(F.lit(1)))
+    in_teleport = F.lit(True) if teleport is None else teleport
+    nodes, counts = checkpoint(
+        edges.select(F.col("src").alias("addr"), F.lit(1).alias("out"))
+        .unionAll(edges.select(F.col("dst").alias("addr"), F.lit(0).alias("out")))
+        .groupBy("addr")
+        .agg(F.sum("out").alias("deg"))
         .select(
             "addr",
-            F.col("deg").cast("bigint").alias("deg"),
-            F.lit(PAGERANK_SCALE // n).cast("bigint").alias("rank_e12"),
-        )
-        .localCheckpoint()
+            F.when(F.col("deg") > 0, F.col("deg")).cast("bigint").alias("deg"),
+            in_teleport.alias("tp"),
+        ),
+        n=F.count(F.lit(1)),
+        n_tp=F.count_if(F.col("tp")),
+        dangling_tp=F.count_if(F.col("tp") & F.col("deg").isNull()),
     )
-    ew = (
-        edges.join(out_deg, "src").select("src", "dst", "deg").localCheckpoint()
-    )
-    iters = 0
-    for _ in range(max_iter):
-        iters += 1
-        # mass sitting on dangling nodes (no out-edges) spreads uniformly
-        dangling = int(
-            rd.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank_e12"), F.lit(0)).cast("bigint"))
-            .collect()[0][0]
+    n = counts["n_tp"]
+    if n == 0:
+        # ADVICE r11: without this, PAGERANK_SCALE // n raises a bare
+        # ZeroDivisionError for a small/skewed corpus
+        # whose teleport draw selects no node
+        raise ValueError(
+            "pagerank_iterate: the teleport set selects zero nodes on "
+            "this graph; widen the predicate or pass an explicit set"
         )
-        dang_share = dangling // n
-        contribs = (
-            ew.join(
-                rd.select(F.col("addr").alias("src"), "rank_e12"), "src"
-            )
-            .select("dst", F.expr("rank_e12 DIV deg").alias("share"))
+    init = PAGERANK_SCALE // n
+    adjacency = edges.select("src", "dst", F.lit(True).alias("edge")).unionAll(
+        nodes.select(
+            F.col("addr").alias("src"), F.col("addr").alias("dst"), F.lit(False)
+        )
+    )
+
+    def step(frame, adj, prev, r):
+        dang_share = prev["dangling"] // n
+        own = ~F.col("edge")
+        agg = (
+            adj.join(frame.select("addr", "deg", "tp", "rank_e12"), "addr")
             .groupBy("dst")
-            .agg(F.sum("share").cast("bigint").alias("contrib"))
+            .agg(
+                F.sum(
+                    F.when(F.col("edge"), F.expr("rank_e12 DIV deg"))
+                ).alias("contrib"),
+                F.max(F.when(own, F.col("rank_e12"))).alias("old"),
+                F.max(F.when(own, F.col("deg"))).alias("deg"),
+                F.max(F.when(own, F.col("tp"))).alias("tp"),
+            )
         )
-        new_rd = (
-            rd.join(contribs, rd.addr == contribs.dst, "left")
-            .select(
-                "addr",
-                "deg",
-                F.expr(
-                    f"CAST({base} + (17 * (COALESCE(contrib, 0) "
-                    f"+ {dang_share})) DIV 20 AS BIGINT)"
-                ).alias("new_rank"),
-                F.col("rank_e12").alias("old_rank"),
-            )
-            .select(
-                "addr",
-                "deg",
-                F.col("new_rank").alias("rank_e12"),
-                F.abs(F.col("new_rank") - F.col("old_rank")).alias("dstep"),
-            )
-            .localCheckpoint()
+        new = F.expr(
+            f"CAST(CASE WHEN tp THEN {3 * PAGERANK_SCALE // (20 * n)} ELSE 0 END"
+            f" + (17 * (COALESCE(contrib, 0)"
+            f" + CASE WHEN tp THEN {dang_share} ELSE 0 END)) DIV 20 AS BIGINT)"
         )
-        rd = new_rd
-        if tol >= 0:
-            delta = int(
-                new_rd.agg(
-                    F.coalesce(F.sum("dstep"), F.lit(0)).cast("bigint")
-                ).collect()[0][0]
-            )
-            if delta <= tol:
-                break
-    return rd.select("addr", "rank_e12"), iters
+        return agg.select(
+            F.col("dst").alias("addr"), "deg", "tp", new.alias("rank_e12"), "old"
+        ).withColumn("dstep", F.abs(F.col("rank_e12") - F.col("old")))
+
+    run = iterate(
+        nodes.select(
+            "addr", "deg", "tp",
+            F.when(F.col("tp"), F.lit(init)).otherwise(0).cast("bigint").alias("rank_e12"),
+        ),
+        step,
+        max_iter,
+        scalars={
+            "dangling": F.coalesce(
+                F.sum(F.when(F.col("deg").isNull(), F.col("rank_e12"))), F.lit(0)
+            ).cast("bigint"),
+            "delta": F.coalesce(F.sum("dstep"), F.lit(0)).cast("bigint"),
+        },
+        until=lambda seen: tol >= 0 and seen["delta"] <= tol,
+        initial={"dangling": init * counts["dangling_tp"]},
+        adjacency=adjacency,
+        key="src",
+        to="dst",
+        rows=stats["rows"] + counts["n"],
+    )
+    return replace(run, state=run.state.select("addr", "rank_e12"))
 
 
 def _edge_fingerprint(e) -> tuple:
@@ -1686,9 +1537,9 @@ def ingest_entity_cospend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("addr", F.col("addr").alias("label"))
         .localCheckpoint()
     )
-    labels, _ = label_propagate(
+    labels = label_propagate(
         sym, labels, max_iter=50, require_converged=True
-    )
+    ).state
     return labels.select(
         F.col("addr").alias("address"), F.col("label").alias("entity")
     )
@@ -3672,24 +3523,7 @@ def _ppr_oracle_sql(iters: int = 10) -> str:
     redirect both target the md5-chosen SEED SET instead of all
     nodes, and the walk starts uniform on the seeds."""
     s = PAGERANK_SCALE
-    sql = f"""
-    WITH txio AS (
-        SELECT (tx).tx_hash AS tx_hash, (tx).inputs AS inputs,
-               (tx).outputs AS outputs
-        FROM (SELECT unnest(txs) AS tx FROM {_DUCK_BLOCKS})
-        WHERE NOT (tx).coinbase
-    ), ins AS (
-        SELECT tx_hash, (i).address[1] AS src
-        FROM (SELECT tx_hash, unnest(inputs) AS i FROM txio)
-    ), outs AS (
-        SELECT tx_hash, (o).address[1] AS dst
-        FROM (SELECT tx_hash, unnest(outputs) AS o FROM txio)
-    ), edges AS MATERIALIZED (
-        SELECT DISTINCT src, dst FROM ins JOIN outs USING (tx_hash)
-        WHERE src <> dst
-    ), nodes AS MATERIALIZED (
-        SELECT src AS node FROM edges UNION SELECT dst FROM edges
-    ), seeds AS MATERIALIZED (
+    head = _DUCK_FLOW_GRAPH + f""", seeds AS MATERIALIZED (
         SELECT node FROM nodes
         WHERE CAST('0x' || substr(md5('ppr:' || node), 1, 4) AS BIGINT)
               % 16 = 0
@@ -3704,18 +3538,9 @@ def _ppr_oracle_sql(iters: int = 10) -> str:
                    AS r
         FROM nodes n LEFT JOIN seeds s ON s.node = n.node
     )"""
-    for i in range(1, iters + 1):
-        sql += f""", contrib{i} AS MATERIALIZED (
-        SELECT e.dst AS node, CAST(SUM(p.r // d.deg) AS BIGINT) AS contrib
-        FROM edges e
-        JOIN pr{i - 1} p ON p.node = e.src
-        JOIN outdeg d ON d.node = e.src
-        GROUP BY e.dst
-    ), dang{i} AS MATERIALIZED (
-        SELECT CAST(COALESCE(SUM(p.r), 0) AS BIGINT) AS d
-        FROM pr{i - 1} p LEFT JOIN outdeg o ON o.node = p.node
-        WHERE o.node IS NULL
-    ), pr{i} AS MATERIALIZED (
+    return unrolled_cte(
+        head,
+        lambda i: _pagerank_round_sql(i, f"""
         SELECT n.node,
                CAST(CASE WHEN sd.node IS NOT NULL
                     THEN 3 * {s} // (20 * (SELECT n FROM ns))
@@ -3727,13 +3552,11 @@ def _ppr_oracle_sql(iters: int = 10) -> str:
                     AS BIGINT) AS r
         FROM nodes n
         LEFT JOIN contrib{i} c ON c.node = n.node
-        LEFT JOIN seeds sd ON sd.node = n.node
-    )"""
-    sql += (
+        LEFT JOIN seeds sd ON sd.node = n.node"""),
+        iters,
         f"\n    SELECT node AS addr, r AS rank_e12 FROM pr{iters}"
-        " WHERE r > 0"
+        " WHERE r > 0",
     )
-    return sql
 
 
 @query("graph_pagerank_personalized", _ppr_oracle_sql())
@@ -3755,36 +3578,9 @@ def graph_pagerank_personalized(
     floor; the 10-hop unrolled DuckDB CTE reproduces the distributed
     result bit-for-bit (zero-mass nodes dropped in both engines).
 
-    Scale: per round one ranks⋈edges shuffle + scalar dangling agg,
-    exactly graph_pagerank's loop; the integer fixpoint early-exit
-    argument carries over verbatim (a fixpoint is invariant under
-    further rounds, so exiting early returns output identical to
-    the full unroll)."""
-    raw = read_blocks_json(spark)
-    txio = (
-        raw.select(F.explode("txs").alias("tx"))
-        .filter(~F.col("tx.coinbase"))
-        .select("tx.tx_hash", "tx.inputs", "tx.outputs")
-    )
-    ins = txio.select("tx_hash", F.explode("inputs").alias("i")).select(
-        "tx_hash", F.col("i.address")[0].alias("src")
-    )
-    outs = txio.select("tx_hash", F.explode("outputs").alias("o")).select(
-        "tx_hash", F.col("o.address")[0].alias("dst")
-    )
-    edges = (
-        ins.join(outs, "tx_hash")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("addr"))
-        .union(edges.select(F.col("dst").alias("addr")))
-        .distinct()
-        .localCheckpoint()
-    )
+    Scale: graph_pagerank's loop (pagerank_iterate) with the seed
+    predicate as its teleport set; the integer fixpoint early-exit
+    argument carries over verbatim."""
     is_seed = (
         F.conv(
             F.substring(
@@ -3798,73 +3594,8 @@ def graph_pagerank_personalized(
         % 16
         == 0
     )
-    seeded = nodes.select("addr", is_seed.alias("is_seed")).localCheckpoint()
-    n_seeds = int(seeded.filter("is_seed").count())
-    if n_seeds == 0:
-        # ADVICE r11: without this, PAGERANK_SCALE // n_seeds raises a
-        # bare ZeroDivisionError on the driver for a small/skewed
-        # corpus whose md5 draw selects no node
-        raise ValueError(
-            "graph_pagerank_personalized: the deterministic seed draw "
-            "(md5 % 16 == 0) selected zero nodes on this corpus; "
-            "widen the seed predicate or personalize over an explicit "
-            "seed list"
-        )
-    out_deg = edges.groupBy("src").agg(
-        F.count("*").cast("bigint").alias("deg")
-    )
-    base = 3 * PAGERANK_SCALE // (20 * n_seeds)
-    init = PAGERANK_SCALE // n_seeds
-    ranks = seeded.select(
-        "addr",
-        "is_seed",
-        F.when(F.col("is_seed"), F.lit(init))
-        .otherwise(0)
-        .cast("bigint")
-        .alias("rank_e12"),
-    ).localCheckpoint()
-    for _ in range(10):
-        contribs = (
-            edges.join(out_deg, "src")
-            .join(ranks, edges.src == ranks.addr)
-            .select("dst", F.expr("rank_e12 DIV deg").alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").cast("bigint").alias("contrib"))
-        )
-        dangling = int(
-            ranks.join(out_deg, ranks.addr == out_deg.src, "left_anti")
-            .agg(F.coalesce(F.sum("rank_e12"), F.lit(0)).cast("bigint"))
-            .collect()[0][0]
-        )
-        dang_share = dangling // n_seeds
-        new_ranks = (
-            seeded.join(contribs, seeded.addr == contribs.dst, "left")
-            .select(
-                "addr",
-                "is_seed",
-                F.expr(
-                    f"CAST(CASE WHEN is_seed THEN {base} ELSE 0 END"
-                    f" + (17 * (COALESCE(contrib, 0)"
-                    f" + CASE WHEN is_seed THEN {dang_share} ELSE 0 END))"
-                    f" DIV 20 AS BIGINT)"
-                ).alias("rank_e12"),
-            )
-            .localCheckpoint()
-        )
-        delta = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), "addr")
-            .agg(
-                F.sum(F.abs(F.col("n.rank_e12") - F.col("o.rank_e12")))
-                .cast("bigint")
-                .alias("d")
-            )
-            .collect()[0][0]
-        )
-        ranks = new_ranks
-        if delta == 0:
-            break
-    return ranks.filter(F.col("rank_e12") > 0).select("addr", "rank_e12")
+    ranks = pagerank_iterate(flow_edges(spark), max_iter=10, teleport=is_seed)
+    return ranks.state.filter(F.col("rank_e12") > 0)
 
 
 @query(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.ingest.facade import _DUCK_BLOCKS
+from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
 from graphsense_datafeed_spark.sources.scans import read_blocks_json
 
 _DUCK_EDGES = f"""
@@ -277,44 +278,51 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FRONTIER (not all visited nodes) against the edge list, anti-joins
     out already-labelled nodes, and stops early on an empty frontier —
     per-round work is O(frontier × avg-degree), the bound is explicit,
-    and the only driver state is the 1-row seed and the per-round
-    emptiness probe (the graph_components convergence discipline). At
-    100 TB the edge list is partitioned by src and every round reuses
+    and the only state read back is the 1-row seed and the frontier size,
+    both observed on checkpoints that run anyway (the ``iterate``
+    primitive).  The edge list is cached once and every round reuses
     that layout."""
-    # localCheckpoint the EDGE build once: the union below consumes it
-    # in both branches (measured: 16 JSON scans / 18 Exchanges in the
-    # un-checkpointed sym plan — the whole parse+explode+self-join ran
-    # twice), and the loop re-reads sym every round — without lineage
-    # truncation the plan doubles per round and every emptiness probe
-    # re-derives the JSON explode chain (facade.py label_propagate
-    # discipline; measured 65 s → sub-second at sf0.01 by the round-5
-    # review).  sym itself stays lazy over the materialized blocks: e
+    # The co-occurrence build is checkpointed ONCE (un-checkpointed,
+    # the union below ran the whole parse+explode+self-join twice), with
+    # the seed — the smallest address, min(src) because e has
+    # src < dst — observed on that same job.  sym needs no distinct: e
     # is distinct with src < dst, so the swapped branch is disjoint
-    # from the first and the old .distinct() was a provable no-op (one
-    # full |2E| exchange+aggregate removed outright).
-    e = cooccurrence_edges(spark).localCheckpoint()
-    sym = e.select("src", "dst").union(
+    # from the first.  The state is every labelled node, ``new`` on
+    # the last frontier; a round appends the unlabelled neighbors of
+    # that frontier, and an empty frontier ends the loop.
+    e, stats = checkpoint(
+        cooccurrence_edges(spark), rows=F.count(F.lit(1)), seed=F.min("src")
+    )
+    sym = e.select("src", "dst").unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    seed = sym.agg(F.min("src").alias("a")).collect()[0]["a"]
-    dist = sym.sparkSession.createDataFrame(
-        [(seed, 0)], "addr string, dist int"
+    start = spark.createDataFrame(
+        [(stats["seed"], 0, True)], "addr string, dist int, new boolean"
     )
-    frontier = dist
-    for depth in range(1, 11):
+
+    def step(dist, adj, prev, depth):
         nxt = (
-            frontier.join(sym, frontier.addr == sym.src)
+            adj.join(dist.filter("new").select("addr"), "addr")
             .select(F.col("dst").alias("addr"))
             .distinct()
             .join(dist.select("addr"), "addr", "left_anti")
-            .select("addr", F.lit(depth).alias("dist"))
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        dist = dist.union(nxt)
-        frontier = nxt
-    return dist.select("addr", F.col("dist").cast("bigint").alias("dist"))
+        return dist.select("addr", "dist", F.lit(False).alias("new")).unionAll(
+            nxt.select("addr", F.lit(depth).alias("dist"), F.lit(True))
+        )
+
+    run = iterate(
+        start,
+        step,
+        10,
+        scalars={"frontier": F.count_if(F.col("new"))},
+        until=lambda seen: seen["frontier"] == 0,
+        adjacency=sym,
+        key="src",
+        to="dst",
+        rows=2 * stats["rows"],
+    )
+    return run.state.select("addr", F.col("dist").cast("bigint").alias("dist"))
 
 
 @query(
@@ -408,25 +416,23 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _duck_kcore_rounds(k: int, rounds: int) -> str:
     """Unrolled peel rounds as chained CTEs (sym0 → symN)."""
-    parts = [
+    return unrolled_cte(
         """sym0 AS (
             SELECT src, dst FROM edges
             UNION ALL
             SELECT dst AS src, src AS dst FROM edges
-        )"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f"""live{r} AS (
-                SELECT src AS node FROM sym{r}
+        )""",
+        lambda r: f""", live{r - 1} AS (
+                SELECT src AS node FROM sym{r - 1}
                 GROUP BY 1 HAVING COUNT(*) >= {k}
-            ), sym{r + 1} AS (
-                SELECT s.src, s.dst FROM sym{r} s
-                JOIN live{r} a ON s.src = a.node
-                JOIN live{r} b ON s.dst = b.node
-            )"""
-        )
-    return ", ".join(parts)
+            ), sym{r} AS (
+                SELECT s.src, s.dst FROM sym{r - 1} s
+                JOIN live{r - 1} a ON s.src = a.node
+                JOIN live{r - 1} b ON s.dst = b.node
+            )""",
+        rounds,
+        "",
+    )
 
 
 _KCORE_K = 3
@@ -459,38 +465,45 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity is exact because the program, not a convergence probe,
     determines the output.
 
-    Scale: the production form iterates with the facade's
-    convergence-guard pattern (graph_components' probe) instead of a
-    fixed unroll — each round is one groupBy + join round-trip, and
-    rounds-to-converge is bounded by the peel depth (typically ≪20
-    even on billion-edge graphs); per-round state is the live edge
-    list, shrinking monotonically."""
-    e = cooccurrence_edges(spark)
-    # localCheckpoint per round: each round references the previous
-    # edge list THREE times (degree count + two endpoint semi-joins),
-    # so an un-cut lineage grows 3^rounds and OOMs the analyzer —
-    # same fix as graph_bfs_layers / label propagation.
-    sym = e.union(
+    Rounds (the ``iterate`` primitive): the edge list is cached once
+    and the state is the LIVE NODE set — the peeled edge list after
+    round r is exactly the edges with both endpoints live after round
+    r (live sets only shrink), so round r counts those edges per src
+    and keeps the nodes with ≥k.  On small graphs the live set is
+    broadcast once per round (both endpoint tests reuse it) to edges
+    partitioned by src: two jobs per round, against five or six with
+    the edge list as the state.  Paired rounds and a sort-based window
+    peel measured no faster."""
+    e, stats = checkpoint(cooccurrence_edges(spark), rows=F.count(F.lit(1)))
+    sym = e.unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    for _ in range(_KCORE_ROUNDS):
-        live = (
-            sym.groupBy(F.col("src").alias("node"))
+    )
+
+    def live_edges(edges, live, small):
+        """Edges of ``edges`` with both endpoints in ``live``."""
+        side = F.broadcast if small else (lambda df: df)
+        return edges.join(
+            side(live.alias("a")), F.col("src") == F.col("a.node"), "left_semi"
+        ).join(side(live.alias("b")), F.col("dst") == F.col("b.node"), "left_semi")
+
+    def peel(live, adj, prev, r):
+        # round 1: every node is live, so every edge counts
+        edges = adj.frame if r == 1 else live_edges(adj.frame, live, adj.broadcast)
+        return (
+            edges.groupBy(F.col("src").alias("node"))
             .agg(F.count("*").alias("c"))
             .filter(F.col("c") >= _KCORE_K)
             .select("node")
         )
-        sym = (
-            sym.join(live, sym.src == live.node, "left_semi")
-            .join(
-                live.select(F.col("node").alias("dnode")),
-                sym.dst == F.col("dnode"),
-                "left_semi",
-            )
-            .localCheckpoint()
-        )
-    return sym.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("bigint").alias("core_degree")
+
+    run = iterate(
+        e, peel, _KCORE_ROUNDS, adjacency=sym, key="dst", to="src",
+        rows=2 * stats["rows"],
+    )
+    return (
+        live_edges(sym, run.state, False)
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.count("*").cast("bigint").alias("core_degree"))
     )
 
 
@@ -1266,12 +1279,12 @@ _HITS_ITERS = 4
 
 def _hits_oracle_sql(iters: int = _HITS_ITERS) -> str:
     """Exact DuckDB oracle for quantized HITS: the iterations unroll
-    into chained MATERIALIZED CTEs (the _pagerank_oracle_sql
-    precedent). Raw hub/authority sums are exact bigints; each
-    normalization is ONE double chain floor(raw·S/Σ) — IEEE-identical
-    on both engines — so every iteration reproduces bit-for-bit."""
+    into chained MATERIALIZED CTEs (``unrolled_cte``). Raw
+    hub/authority sums are exact bigints; each normalization is ONE
+    double chain floor(raw·S/Σ) — IEEE-identical on both engines — so
+    every iteration reproduces bit-for-bit."""
     s = _HITS_SCALE
-    sql = f"""
+    head = f"""
     WITH bip AS MATERIALIZED (
         SELECT DISTINCT o_custkey AS cust, l_partkey AS part
         FROM lineitem JOIN orders ON o_orderkey = l_orderkey
@@ -1281,8 +1294,9 @@ def _hits_oracle_sql(iters: int = _HITS_ITERS) -> str:
         SELECT part, CAST({s} // (SELECT n FROM np) AS BIGINT) AS a
         FROM parts
     )"""
-    for i in range(1, iters + 1):
-        sql += f""", hraw{i} AS MATERIALIZED (
+    return unrolled_cte(
+        head,
+        lambda i: f""", hraw{i} AS MATERIALIZED (
         SELECT b.cust, CAST(SUM(a.a) AS BIGINT) AS hr
         FROM bip b JOIN a{i - 1} a USING (part) GROUP BY b.cust
     ), hs{i} AS (SELECT CAST(SUM(hr) AS BIGINT) AS t FROM hraw{i}
@@ -1302,11 +1316,23 @@ def _hits_oracle_sql(iters: int = _HITS_ITERS) -> str:
                           / CAST((SELECT t FROM asum{i}) AS DOUBLE))
                     AS BIGINT) AS a
         FROM araw{i}
-    )"""
-    sql += f"""
+    )""",
+        iters,
+        f"""
     SELECT part AS l_partkey, a AS authority_e12
-    FROM a{iters} ORDER BY a DESC, part LIMIT 20"""
-    return sql
+    FROM a{iters} ORDER BY a DESC, part LIMIT 20""",
+    )
+
+
+def _l1_normalized(raw, key: str, total: int):
+    """floor(raw·S/Σ) per row: one double chain, IEEE-identical on
+    both engines (Σ < 2^53, so double(Σ) is exact)."""
+    return raw.select(
+        key,
+        F.floor(F.col("raw").cast("double") * float(_HITS_SCALE) / float(total))
+        .cast("bigint")
+        .alias("w"),
+    )
 
 
 @query("graph_hits_bounded", _hits_oracle_sql())
@@ -1330,75 +1356,56 @@ def graph_hits_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Quantization drift vs float HITS ≤ iters·1e-12
     relative — invisible at ranking granularity.
 
-    Scale: each round is two keyed join+agg shuffles over the edge
-    list (partial aggregation shrinks the shuffle to per-key
-    partials) plus a 1-row scalar broadcast; localCheckpoint
-    truncates per-round lineage exactly as pagerank_iterate does.
-    No step is quadratic in nodes or edges."""
+    Jobs (the ``iterate`` primitive): the bipartite edge list is
+    cached once.  Each half-round (hub, then authority) is one join +
+    one keyed aggregate whose RAW sums are checkpointed, with the L1
+    total Σ observed on that same job and folded into the next
+    half-round as a literal.  At sf0.01 a half-round is two jobs (hub:
+    broadcast, checkpoint) or three (authority: plus the aggregate
+    exchange), 28 per call against 63 with separate collects; caching
+    the edge list a second time, by the other key, ran fewer jobs but
+    did not win cold.  No step is quadratic in nodes or edges."""
     from graphsense_datafeed_spark.sources.tables import load
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
+    bip, stats = checkpoint(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        rows=F.count(F.lit(1)),
     )
-    s = _HITS_SCALE
-    n_parts = bip.select("part").distinct().count()
-    a = (
-        bip.select("part")
-        .distinct()
-        .select("part", F.lit(s // n_parts).cast("bigint").alias("a"))
+    parts, counted = checkpoint(
+        bip.select("part").distinct(), n=F.count(F.lit(1))
     )
-    # Round-15: each half-round checkpoints the RAW sums and folds the
-    # L1 total in as a literal (t < 2^53 — double(t) exact, the
-    # division chain is IEEE-identical to the broadcast form). The
-    # previous crossJoin(broadcast(sum)) plan consumed the join+agg
-    # subtree twice per half-round (once into the scalar agg, once as
-    # the join's left side); now it runs once, the total is a scalar
-    # scan of the materialized blocks, and the normalization is a
-    # narrow map over them. Interleaved A/B at sf0.1: 7.2/4.7 →
-    # 5.2/4.1 s with bit-identical output.
-    for _ in range(_HITS_ITERS):
-        hraw = (
-            bip.join(a, "part")
-            .groupBy("cust")
-            .agg(F.sum("a").cast("bigint").alias("hr"))
-            .localCheckpoint()
-        )
-        ht = int(
-            hraw.agg(F.sum("hr").cast("bigint")).collect()[0][0]
-        )
-        h = hraw.select(
-            "cust",
-            F.floor(F.col("hr").cast("double") * float(s) / float(ht))
-            .cast("bigint")
-            .alias("h"),
-        )
-        araw = (
-            bip.join(h, "cust")
-            .groupBy("part")
-            .agg(F.sum("h").cast("bigint").alias("ar"))
-            .localCheckpoint()
-        )
-        at = int(
-            araw.agg(F.sum("ar").cast("bigint")).collect()[0][0]
-        )
-        a = araw.select(
-            "part",
-            F.floor(F.col("ar").cast("double") * float(s) / float(at))
-            .cast("bigint")
-            .alias("a"),
-        )
+    a0 = parts.select(
+        "part", F.lit(_HITS_SCALE // counted["n"]).cast("bigint").alias("w")
+    )
+
+    def half_round(frame, adj, prev, r):
+        if r % 2:  # hubs from the authorities (a0 is already normalized)
+            a = frame if r == 1 else _l1_normalized(frame, "part", prev["total"])
+            by, on = adj.join(a, "part"), "cust"
+        else:  # authorities from the hubs
+            h = _l1_normalized(frame, "cust", prev["total"])
+            by, on = adj.join(h, "cust", by="cust"), "part"
+        return by.groupBy(on).agg(F.sum("w").cast("bigint").alias("raw"))
+
+    run = iterate(
+        a0,
+        half_round,
+        2 * _HITS_ITERS,
+        scalars={"total": F.sum("raw").cast("bigint")},
+        adjacency=bip,
+        key="part",
+        to="cust",
+        rows=stats["rows"],
+    )
+    a = _l1_normalized(run.state, "part", run.metrics[-1]["total"])
     return (
-        a.select(
-            F.col("part").alias("l_partkey"),
-            F.col("a").alias("authority_e12"),
-        )
+        a.select(F.col("part").alias("l_partkey"), F.col("w").alias("authority_e12"))
         .orderBy(F.col("authority_e12").desc(), "l_partkey")
         .limit(20)
     )
@@ -2032,7 +2039,7 @@ def graph_hub_removal_resilience(
     # k=0 rung reads sym/nodes directly (its hub set is empty, so the
     # two anti-joins were no-op re-materializations), and the per-rung
     # fsym checkpoint is gone: label_propagate materializes the
-    # dst-partitioned adjacency itself.
+    # adjacency itself.
     edges = cooccurrence_edges(spark).localCheckpoint()
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -2064,12 +2071,12 @@ def graph_hub_removal_resilience(
         labels = survivors.select(
             F.col("a").alias("addr"), F.col("a").alias("label")
         ).localCheckpoint()
-        labels, _ = label_propagate(
+        labels = label_propagate(
             fsym.select(F.col("a").alias("src"), F.col("b").alias("dst")),
             labels,
             max_iter=50,
             require_converged=True,
-        )
+        ).state
         comps = labels.groupBy("label").agg(
             F.count("*").cast("bigint").alias("csize")
         )

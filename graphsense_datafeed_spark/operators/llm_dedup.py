@@ -1185,7 +1185,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # require_converged: the oracle is the FULL recursive closure, so
     # an unconverged label set must raise, not silently hash-mismatch.
-    labels, _ = label_propagate(sym, labels, max_iter=50, require_converged=True)
+    labels = label_propagate(sym, labels, max_iter=50, require_converged=True).state
     return labels.select(
         F.col("addr").alias("doc_id"),
         F.col("label").cast("bigint").alias("cluster_rep"),

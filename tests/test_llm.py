@@ -353,13 +353,8 @@ def test_pagerank_early_exit_on_stationary_graph(spark):
     edges = spark.createDataFrame(
         [(f"a{i}", f"a{(i + 1) % 6}") for i in range(6)], "src string, dst string"
     )
-    nodes = (
-        edges.select(F.col("src").alias("addr"))
-        .union(edges.select(F.col("dst").alias("addr")))
-        .distinct()
-    )
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks, iters = pagerank_iterate(nodes, edges, out_deg, 6, max_iter=10)
+    run = pagerank_iterate(edges, max_iter=10)
+    ranks, iters = run.state, run.rounds_run
     assert iters < 10, iters
     from graphsense_datafeed_spark.ingest.facade import PAGERANK_SCALE
 
@@ -376,10 +371,10 @@ def test_pagerank_early_exit_output_matches_full_run(spark):
     edges = spark.createDataFrame(
         [(f"a{i}", f"a{(i + 1) % 4}") for i in range(4)], "src string, dst string"
     )
-    nodes = edges.select(F.col("src").alias("addr")).distinct()
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    early, it_early = pagerank_iterate(nodes, edges, out_deg, 4, max_iter=10, tol=0)
-    full, it_full = pagerank_iterate(nodes, edges, out_deg, 4, max_iter=10, tol=-1)
+    early_run = pagerank_iterate(edges, max_iter=10, tol=0)
+    full_run = pagerank_iterate(edges, max_iter=10, tol=-1)
+    early, it_early = early_run.state, early_run.rounds_run
+    full, it_full = full_run.state, full_run.rounds_run
     assert it_early < it_full == 10
     e = {r["addr"]: r["rank_e12"] for r in early.collect()}
     f_ = {r["addr"]: r["rank_e12"] for r in full.collect()}
@@ -401,7 +396,8 @@ def test_components_converge_before_iteration_bound(spark):
         .distinct()
         .select("addr", F.xxhash64("addr").alias("label"))
     )
-    labels, iters = label_propagate(sym, labels, max_iter=20)
+    run = label_propagate(sym, labels, max_iter=20)
+    labels, iters = run.state, run.rounds_run
     assert iters < 20, iters
     assert labels.select("label").distinct().count() == 1
 
@@ -554,7 +550,7 @@ def test_star_contract_matches_label_propagation(spark):
         .distinct()
         .select("addr", F.xxhash64("addr").alias("label"))
     )
-    lp_labels, _ = label_propagate(sym, lp0, max_iter=100)
+    lp_labels = label_propagate(sym, lp0, max_iter=100).state
     assert _partition_of(star_labels) == _partition_of(lp_labels)
     assert star_rounds < 30
 
@@ -583,7 +579,7 @@ def test_star_contract_beats_propagation_on_path(spark):
         .distinct()
         .select("addr", F.xxhash64("addr").alias("label"))
     )
-    _, lp_rounds = label_propagate(sym, lp0, max_iter=100)
+    lp_rounds = label_propagate(sym, lp0, max_iter=100).rounds_run
     assert lp_rounds > star_rounds
 
 

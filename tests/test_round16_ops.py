@@ -55,22 +55,24 @@ class TestLabelPropagateHubSalting:
 
     def test_salting_fires_and_labels_match_fixpoint(self, spark, monkeypatch):
         import graphsense_datafeed_spark.ingest.facade as facade
+        import graphsense_datafeed_spark.ingest.iterate as iterate
 
         # the census is size-gated (it only pays off once a dst can
         # dominate a full 2M-row partition) — force it on for the
         # planted fixture
-        monkeypatch.setattr(facade, "_HUB_CENSUS_MIN_ROWS", 0)
+        monkeypatch.setattr(iterate, "HUB_CENSUS_MIN_ROWS", 0)
         sym, edges = self._skewed_sym(spark)
         nodes = sym.select(F.col("src").alias("addr")).distinct()
         labels = nodes.select(
             "addr", F.xxhash64("addr").alias("label")
         ).localCheckpoint()
         # seed label per node, as the callers build it
-        out, iters = facade.label_propagate(
+        run = facade.label_propagate(
             sym, labels, max_iter=50, require_converged=True
         )
+        out = run.state
         # (1) the census fired on the planted hub
-        assert "hub" in facade._LAST_HUBS, facade._LAST_HUBS
+        assert "hub" in run.hubs, run.hubs
         # (2) labels == the min-xxhash64 of each node's component
         got = {r["addr"]: r["label"] for r in out.collect()}
         seeds = {
@@ -100,10 +102,11 @@ class TestLabelPropagateHubSalting:
         labels = nodes.select(
             "addr", F.xxhash64("addr").alias("label")
         ).localCheckpoint()
-        out, _ = facade.label_propagate(
+        run = facade.label_propagate(
             sym, labels, max_iter=50, require_converged=True
         )
-        assert facade._LAST_HUBS == []
+        out = run.state
+        assert run.hubs == []
         # one component: every label equals the global min seed
         vals = {r["label"] for r in out.collect()}
         assert len(vals) == 1
@@ -120,7 +123,8 @@ class TestLabelPropagateHubSalting:
             .select("addr", F.xxhash64("addr").alias("label"))
             .localCheckpoint()
         )
-        with pytest.raises(AssertionError, match="even max_iter"):
+        # a ValueError, not an assert: the check must survive python -O
+        with pytest.raises(ValueError, match="even"):
             facade.label_propagate(sym, labels, max_iter=7)
 
 
