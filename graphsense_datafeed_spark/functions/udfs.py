@@ -138,22 +138,24 @@ def udtf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(groups)."""
 
     def running_purchases(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # null user_ids are one group, as in SQL's PARTITION BY: keep
+        # them in the groupby and carry the raw key, compared null-safely
         carry_uid = None
         carry_cum = 0
         for pdf in batches:
             if not len(pdf):
                 continue
+            uid = pdf["user_id"]
             cum = (
                 (pdf["event_type"] == "purchase")
                 .astype("int64")
-                .groupby(pdf["user_id"].to_numpy())
+                .groupby(uid, dropna=False)
                 .cumsum()
             )
-            if carry_uid is not None:
-                mask = pdf["user_id"].to_numpy() == carry_uid
-                if mask.any():
-                    cum[mask] += carry_cum
-            carry_uid = int(pdf["user_id"].iloc[-1])
+            if carry_cum:
+                mask = uid.isna() if pd.isna(carry_uid) else uid == carry_uid
+                cum[mask] += carry_cum
+            carry_uid = uid.iloc[-1]
             carry_cum = int(cum.iloc[-1])
             yield pd.DataFrame(
                 {

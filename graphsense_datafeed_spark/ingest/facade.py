@@ -561,27 +561,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture diameter. The loop is driver-side CONTROL FLOW only; all
     data stays on executors (the changed count observed on each
     checkpoint is the convergence check)."""
-    raw = read_blocks_json(spark)
-    txio = (
-        raw.select(F.explode("txs").alias("tx"))
-        .filter(~F.col("tx.coinbase"))
-        .select("tx.tx_hash", "tx.inputs", "tx.outputs")
-    )
-    ins = txio.select(
-        "tx_hash", F.explode("inputs").alias("i")
-    ).select("tx_hash", F.col("i.address")[0].alias("addr"))
-    outs = txio.select(
-        "tx_hash", F.explode("outputs").alias("o")
-    ).select("tx_hash", F.col("o.address")[0].alias("addr"))
     # co-spend edges: addresses appearing in the same tx (either side)
-    nodes_in_tx = ins.union(outs).distinct()
-    a, b = nodes_in_tx.alias("a"), nodes_in_tx.alias("b")
-    edges = (
-        a.join(b, "tx_hash")
-        .filter(F.col("a.addr") < F.col("b.addr"))
-        .select(F.col("a.addr").alias("src"), F.col("b.addr").alias("dst"))
-        .distinct()
-    )
+    edges = cooccurrence_edges(spark)
     # undirected: propagate both ways
     sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # localCheckpoint each round: iteration grows the logical plan
@@ -590,7 +571,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncates lineage to the materialized data, the standard
     # iterative-DataFrame pattern (production: reliable checkpoint dir).
     labels = (
-        nodes_in_tx.select("addr")
+        _tx_addresses(spark)
+        .select("addr")
         .distinct()
         .select("addr", F.xxhash64("addr").alias("label"))
         .localCheckpoint()
@@ -986,6 +968,40 @@ def flow_edges(spark: SparkSession) -> DataFrame:
     )
 
 
+def _tx_addresses(spark: SparkSession) -> DataFrame:
+    """Distinct (tx_hash, addr): every address a non-coinbase tx
+    touches, on either side — the node frame of the co-occurrence
+    graph (graph_components labels its nodes from it)."""
+    txio = (
+        read_blocks_json(spark)
+        .select(F.explode("txs").alias("tx"))
+        .filter(~F.col("tx.coinbase"))
+        .select("tx.tx_hash", "tx.inputs", "tx.outputs")
+    )
+    ins = txio.select(
+        "tx_hash", F.explode("inputs").alias("io")
+    ).select("tx_hash", F.col("io.address")[0].alias("addr"))
+    outs = txio.select(
+        "tx_hash", F.explode("outputs").alias("io")
+    ).select("tx_hash", F.col("io.address")[0].alias("addr"))
+    return ins.union(outs).distinct()
+
+
+def cooccurrence_edges(spark: SparkSession) -> DataFrame:
+    """(src, dst) with src < dst — distinct address co-occurrence
+    edges: two addresses touched by the same non-coinbase tx. The
+    lexicographic orientation means each undirected edge appears
+    exactly once."""
+    base = _tx_addresses(spark)
+    a, b = base.alias("a"), base.alias("b")
+    return (
+        a.join(b, "tx_hash")
+        .filter(F.col("a.addr") < F.col("b.addr"))
+        .select(F.col("a.addr").alias("src"), F.col("b.addr").alias("dst"))
+        .distinct()
+    )
+
+
 @query("graph_pagerank", _pagerank_oracle_sql())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the directed address-flow graph — the second
@@ -1210,27 +1226,7 @@ def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``graph_components``; tests assert both algorithms produce
     identical component partitions, and that star contraction beats
     the propagation round count on a long path."""
-    raw = read_blocks_json(spark)
-    txio = (
-        raw.select(F.explode("txs").alias("tx"))
-        .filter(~F.col("tx.coinbase"))
-        .select("tx.tx_hash", "tx.inputs", "tx.outputs")
-    )
-    ins = txio.select(
-        "tx_hash", F.explode("inputs").alias("i")
-    ).select("tx_hash", F.col("i.address")[0].alias("addr"))
-    outs = txio.select(
-        "tx_hash", F.explode("outputs").alias("o")
-    ).select("tx_hash", F.col("o.address")[0].alias("addr"))
-    nodes_in_tx = ins.union(outs).distinct()
-    a, b = nodes_in_tx.alias("a"), nodes_in_tx.alias("b")
-    edges = (
-        a.join(b, "tx_hash")
-        .filter(F.col("a.addr") < F.col("b.addr"))
-        .select(F.col("a.addr").alias("src"), F.col("b.addr").alias("dst"))
-        .distinct()
-    )
-    labels, _ = star_contract(edges)
+    labels, _ = star_contract(cooccurrence_edges(spark))
     return labels.groupBy("label").agg(
         F.count("*").alias("component_size"),
         F.min("addr").alias("representative"),

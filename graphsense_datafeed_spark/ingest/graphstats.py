@@ -7,6 +7,15 @@ distributed (hubs vs leaves). Both are pure relational programs over
 the same co-occurrence edge set `graph_components` uses — no graph
 library, exact DuckDB oracles.
 
+Each shared graph frame has one builder, and every query calls it:
+- `cooccurrence_edges` (in facade.py, next to `flow_edges`): the
+  address co-occurrence edges;
+- `_copurchase_bipartite`: the customer–part co-purchase bipartite
+  frame, (cust, part) distinct;
+- `_copurchase_pairs`: its within-part customer pairs sharing ≥3 parts.
+The builders return lazy frames; a query that reads one more than
+once materializes it itself.
+
 Scale notes (100 TB):
 - The edge set is DISTINCT (a < b) pairs per tx — built by one
   shuffle on tx_hash, deduped by one shuffle on the edge key. Every
@@ -29,9 +38,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.registry import query
-from graphsense_datafeed_spark.ingest.facade import _DUCK_BLOCKS
+from graphsense_datafeed_spark.ingest.facade import _DUCK_BLOCKS, cooccurrence_edges
 from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
 from graphsense_datafeed_spark.sources.scans import read_blocks_json
+from graphsense_datafeed_spark.sources.tables import load
 
 _DUCK_EDGES = f"""
     txio AS (
@@ -52,31 +62,40 @@ _DUCK_EDGES = f"""
 """
 
 
-def cooccurrence_edges(spark: SparkSession) -> DataFrame:
-    """(src, dst) with src < dst — distinct address co-occurrence
-    edges: two addresses touched by the same non-coinbase tx. The
-    lexicographic orientation means each undirected edge appears
-    exactly once."""
-    raw = read_blocks_json(spark)
-    txio = (
-        raw.select(F.explode("txs").alias("tx"))
-        .filter(~F.col("tx.coinbase"))
-        .select("tx.tx_hash", "tx.inputs", "tx.outputs")
-    )
-    ins = txio.select(
-        "tx_hash", F.explode("inputs").alias("io")
-    ).select("tx_hash", F.col("io.address")[0].alias("addr"))
-    outs = txio.select(
-        "tx_hash", F.explode("outputs").alias("io")
-    ).select("tx_hash", F.col("io.address")[0].alias("addr"))
-    base = ins.union(outs).distinct()
-    a = base.alias("a")
-    b = base.alias("b")
+def _copurchase_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cust, part) distinct — the customer–part co-purchase bipartite
+    graph: customer ``cust`` bought part ``part`` on some order.  Lazy:
+    a caller that reads it more than once materializes it itself."""
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     return (
-        a.join(b, "tx_hash")
-        .filter(F.col("a.addr") < F.col("b.addr"))
-        .select(F.col("a.addr").alias("src"), F.col("b.addr").alias("dst"))
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
         .distinct()
+    )
+
+
+def _copurchase_pairs(bip: DataFrame) -> DataFrame:
+    """(cust_a, cust_b, common_parts) over a ``_copurchase_bipartite``
+    frame: customer pairs, cust_a < cust_b, sharing at least 3 parts.
+
+    Pairs are generated only within a shared part (an equi-join on the
+    part key, never customer × customer), so the work is Σ_part d_p²,
+    not |customers|².  The join's build side is hinted SHUFFLE_HASH:
+    hash-build beat sort-merge on this join, interleaved A/B at sf0.1
+    ~3.0 vs ~4.2 s; the build side is one hash partition of ``bip``,
+    bounded by shuffle-partition sizing."""
+    a = bip.alias("a")
+    b = bip.hint("SHUFFLE_HASH").alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.part") == F.col("b.part"))
+            & (F.col("a.cust") < F.col("b.cust")),
+        )
+        .groupBy(F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b"))
+        .agg(F.count("*").cast("bigint").alias("common_parts"))
+        .filter(F.col("common_parts") >= 3)
     )
 
 
@@ -193,36 +212,11 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     this output bound); Jaccard enters the double domain exactly once,
     over exact bigint counts, identically in both engines. Top-20 with
     a full-order tiebreak is a TakeOrderedAndProject, not a sort."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # Round-15 (guide §2.4): bip feeds deg AND both self-join sides —
     # checkpoint it so the join+distinct build runs once, not thrice
-    bip = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint()
-    )
+    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
     deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("common_parts"))
-        .filter(F.col("common_parts") >= 3)
-    )
+    pairs = _copurchase_pairs(bip)
     da = deg.select(F.col("cust").alias("cust_a"), F.col("d").alias("da"))
     db = deg.select(F.col("cust").alias("cust_b"), F.col("d").alias("db"))
     scored = (
@@ -706,18 +700,9 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     only within a shared part, never cust×cust; hub parts fall under
     the same count-certified cap discipline (df-damping makes their
     weight ≈0 anyway, which is the POINT of Adamic–Adar)."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # Round-15 (guide §2.4): bip feeds the df-weight agg AND both
     # self-join sides — checkpoint it so the build runs once
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint()
-    )
+    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
     w = (
         bip.groupBy("part")
         .agg(F.count("*").cast("bigint").alias("dp"))
@@ -729,10 +714,9 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wp"),
         )
     )
+    # the within-part pairs of _copurchase_pairs (same hash-build
+    # hint), kept per part here: the score weights each shared part
     a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
     b = bip.hint("SHUFFLE_HASH").alias("b")
     w2 = w.select(F.col("part").alias("w_part"), "wp")
     pairs = a.join(
@@ -791,38 +775,11 @@ def graph_preferential_attachment(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: identical to graph_common_neighbors; the degree table is
     |customers| rows and joins by key at the candidate-set bound."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-        # Round-15 (guide §2.4): bip feeds deg AND both self-join
-        # sides — checkpoint it so the build runs once, not thrice
-        .localCheckpoint()
-    )
+    # Round-15 (guide §2.4): bip feeds deg AND both self-join sides —
+    # checkpoint it so the build runs once, not thrice
+    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
     deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("common_parts"))
-        .filter(F.col("common_parts") >= 3)
-    )
+    pairs = _copurchase_pairs(bip)
     da = deg.select(F.col("cust").alias("cust_a"), F.col("d").alias("da"))
     db = deg.select(F.col("cust").alias("cust_b"), F.col("d").alias("db"))
     return (
@@ -898,35 +855,9 @@ def graph_modularity_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edges from the bounded within-part generation; degree and
     within-edge tables are |segments| rows; the label join is
     broadcast-sized (customer dim)."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-    )
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b")
-        )
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 3)
-        .select("cust_a", "cust_b")
+    edges = _copurchase_pairs(_copurchase_bipartite(spark, sf_dir)).select(
+        "cust_a", "cust_b"
     )
     sa = c.select(
         F.col("c_custkey").alias("cust_a"), F.col("c_mktsegment").alias("seg_a")
@@ -1013,38 +944,11 @@ def graph_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical Σ_p d_p² pair generation as the siblings (pairs
     only within a shared part, never cust×cust); the two degree joins
     are broadcast-sized (|customers| rows of two bigints)."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-        # Round-15 (guide §2.4): bip feeds deg AND both self-join
-        # sides — checkpoint it so the build runs once, not thrice
-        .localCheckpoint()
-    )
+    # Round-15 (guide §2.4): bip feeds deg AND both self-join sides —
+    # checkpoint it so the build runs once, not thrice
+    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
     deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b")
-        )
-        .agg(F.count("*").cast("bigint").alias("common_parts"))
-        .filter(F.col("common_parts") >= 3)
-    )
+    pairs = _copurchase_pairs(bip)
     da = deg.select(F.col("cust").alias("cust_a"), F.col("d").alias("da"))
     db = deg.select(F.col("cust").alias("cust_b"), F.col("d").alias("db"))
     joined = pairs.join(F.broadcast(da), "cust_a").join(
@@ -1102,18 +1006,11 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ordered pass runs over the DEGREE TABLE (|customers|
     rows, pre-reduced — the audit-benign shape), not edges; degree
     counts are one keyed aggregation."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
+    deg = (
+        _copurchase_bipartite(spark, sf_dir)
+        .groupBy("cust")
+        .agg(F.count("*").cast("bigint").alias("d"))
     )
-    deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
     w = Window.orderBy("d", "cust")
     wall = Window.partitionBy()
     ranked = deg.select(
@@ -1196,34 +1093,9 @@ def graph_katz_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the same Σd² pair generation as the link-prediction trio
     feeds a two-hop message pass; at 100 TB each hop is one keyed
     exchange on the node id."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-    )
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("src"), F.col("b.cust").alias("dst")
-        )
-        .agg(F.count("*").alias("cp"))
-        .filter(F.col("cp") >= 3)
-        .select("src", "dst")
+        _copurchase_pairs(_copurchase_bipartite(spark, sf_dir))
+        .select(F.col("cust_a").alias("src"), F.col("cust_b").alias("dst"))
         # Round-15 (guide §2.4): pairs feeds both halves of the
         # symmetrized edge list, which the 3-hop message pass then
         # consumes repeatedly — checkpoint the small pair list once
@@ -1365,17 +1237,8 @@ def graph_hits_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange), 28 per call against 63 with separate collects; caching
     the edge list a second time, by the other key, ran fewer jobs but
     did not win cold.  No step is quadratic in nodes or edges."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     bip, stats = checkpoint(
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct(),
-        rows=F.count(F.lit(1)),
+        _copurchase_bipartite(spark, sf_dir), rows=F.count(F.lit(1))
     )
     parts, counted = checkpoint(
         bip.select("part").distinct(), n=F.count(F.lit(1))
@@ -1500,32 +1363,9 @@ def graph_rich_club_coefficient(
     4 thresholds now read the 1-row wide frame through a single
     ``stack`` generate instead of 4 unioned re-evaluations. Measured
     2.0/1.3 s isolated-noop; identical output, oracle green."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-    )
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(F.col("a.cust").alias("ca"), F.col("b.cust").alias("cb"))
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 3)
-        .select("ca", "cb")
+        _copurchase_pairs(_copurchase_bipartite(spark, sf_dir))
+        .select(F.col("cust_a").alias("ca"), F.col("cust_b").alias("cb"))
         .localCheckpoint()
     )
     deg = (
@@ -2166,35 +2006,9 @@ def graph_conductance_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: reuses the bounded within-part edge generation; cut and
     volume are two |segments|-row rollups on the same frame — the
     modularity plan with one different predicate."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-    )
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b")
-        )
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 3)
-        .select("cust_a", "cust_b")
+    edges = _copurchase_pairs(_copurchase_bipartite(spark, sf_dir)).select(
+        "cust_a", "cust_b"
     )
     sa = c.select(
         F.col("c_custkey").alias("cust_a"), F.col("c_mktsegment").alias("seg_a")
@@ -2297,33 +2111,8 @@ def graph_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor-degree join keys on the edge list (|edges| rows, the
     same exchange the degree count uses) and everything downstream
     is |degree-classes| rows."""
-    from graphsense_datafeed_spark.sources.tables import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bip = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
-        )
-        .distinct()
-    )
-    a = bip.alias("a")
-    # round-15: hash-build beats sort-merge for the within-part pair
-    # join (A/B interleaved at sf0.1: ~4.2 vs ~3.0 s; build side is
-    # one hash partition of bip, bounded by shuffle-partition sizing)
-    b = bip.hint("SHUFFLE_HASH").alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.cust") < F.col("b.cust")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust_a"), F.col("b.cust").alias("cust_b")
-        )
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 3)
+        _copurchase_pairs(_copurchase_bipartite(spark, sf_dir))
         .select("cust_a", "cust_b")
         # Round-15 (guide §2.4): edges feeds sym twice and sym feeds
         # deg + the nbr join — checkpoint the small pair list so the
@@ -3239,8 +3028,6 @@ def graph_butterfly_count_bipartite(
     rollup — the wedge side of butterfly counting, with the standard
     hub caveat handled by the bounded type domain (on an unbounded
     side you'd degree-order like graph_triangle_count documents)."""
-    from graphsense_datafeed_spark.sources.tables import load
-
     ev = load(spark, sf_dir, "events")
     pres = ev.select("user_id", "event_type").distinct()
     b = pres.select(

@@ -89,320 +89,14 @@ _OPERATOR_MODULES = (
     "graphsense_datafeed_spark.operators.joins",
 )
 
-# The driver verifies the first ~50 registry entries per round
-# (observed caps: r1-r4 all stopped at 50).  The round-5 window closes
-# the verification ledger: after r4, exactly 35 registered queries have
-# never seen the driver (the 9 round-4 §2 additions + the
-# win/ts/graph/IR/goldens tail) and one row came back red (`embed_pca`,
-# array-output driver crash — fixed this round).  Pinning embed_pca
-# first and the 35 never-checked rows behind it means a green r5 sweep
-# leaves EVERY registered query driver-verified at least once.
-# Remaining slots (37-50) carry the new round-5 operators so they get
-# driver contact the round they land, plus `corpus_pipeline`'s
-# composition inputs re-checked alongside it.
-_ROUND5_WINDOW = (
-    # --- the one r4 red row, fixed this round: re-check first ---
-    "embed_pca",
-    # --- 9 round-4 §2 additions, never driver-checked ---
-    "dedup_apply",
-    "split_train_holdout",
-    "embed_quality_gate",
-    "text_bigram_lm",
-    "ts_outlier_mad",
-    "scd_type2",
-    "batch_merge_upsert",
-    "join_bloom_prefilter",
-    "text_line_dedup",
-    # --- the never-checked exact-oracle tail (26) ---
-    "corpus_pipeline",
-    "win_range_interval",
-    "win_time_range_sum",
-    "ts_resample_locf",
-    "histogram_equiwidth",
-    "graph_components",
-    "graph_triangle_count",
-    "graph_degree_hist",
-    "text_inverted_index",
-    "text_cooccurrence",
-    "scan_partition_pruning",
-    "multimodal_frames",
-    "scan_json_corrupt",
-    "set_union_by_name",
-    "stratified_sample",
-    "profile_columns",
-    "cdc_snapshot_diff",
-    "golden_q2_min_cost",
-    "golden_q4_priority",
-    "golden_q7_trade",
-    "golden_q10_returns",
-    "golden_q11_important_stock",
-    "golden_q12_shipmode_priority",
-    "golden_q16_supplier_cnt",
-    "golden_q20_excess_stock",
-    "golden_q21_waiting_orders",
-    # --- round-5 additions: driver contact the round they land ---
-    "unpivot_longer",
-    "agg_string_agg",
-    "join_null_safe",
-    "sample_weighted",
-    "events_retention",
-    "ts_ewma",
-    "ts_zscore_anomaly",
-    "sample_reservoir",
-    "anon_k_suppress",
-    "agg_corr_exact",
-    "text_ngram_topk",
-    "dedup_rank_quality",
-    "ts_changepoint_cusum",
-    "agg_count_if_distinct",
-)
-
-# Round-6 window: the first 50 of the round-5 overflow queue, promoted
-# per the documented rotation recipe (VERDICT r5 item 1).  Every entry
-# is local-sweep green; a green CORRECTNESS_r06 row for each converts
-# it from judge-verified to driver-verified.  sim_ann_pq (a ✖ row,
-# never driver-seen) rides at its queued position (#48).
-_ROUND6_WINDOW = (
-    "agg_decimal_exact",
-    "histogram_equidepth",
-    "join_bucketed_colocated",
-    "join_scd_lookup",
-    "graph_common_neighbors",
-    "embed_knn_graph",
-    "bpe_pair_counts",
-    "text_winnowing",
-    "dedup_containment",
-    "ts_downsample_m4",
-    "embed_matryoshka_truncate",
-    "embedding_pipeline",
-    "join_asof_tolerance",
-    "sink_manifest_commit",
-    "source_python_stream",
-    "date_spine_fill",
-    "agg_itemset_pairs",
-    "multimodal_dedup_exact",
-    "vocab_coverage",
-    "agg_hll_window_rollup",
-    "events_concurrency_sweep",
-    "sink_manifest_vacuum",
-    "graph_bfs_layers",
-    "join_interval_self",
-    "scan_dynamic_partition_pruning",
-    "ts_seasonality_profile",
-    "agg_percentile_disc",
-    "agg_weighted_median",
-    "agg_gini_concentration",
-    "agg_lorenz_deciles",
-    "agg_histogram_log2",
-    "agg_ks_two_sample",
-    "agg_chi_square",
-    "win_moving_median",
-    "ts_acf",
-    "events_attribution",
-    "events_rfm_segment",
-    "text_dsir_weights",
-    "bpe_merge_apply",
-    "text_gopher_rules",
-    "anon_l_diversity",
-    "agg_t_test_welch",
-    "agg_mann_whitney",
-    "graph_clustering_coeff",
-    "graph_kcore_peel",
-    "text_keywords_topk",
-    "ts_holt_linear",
-    "sim_ann_pq",
-    "join_asof_nearest",
-    "agg_kl_divergence",
-)
-
-# Round-7 window, promoted per the documented rotation recipe (VERDICT
-# r6 item 1): CORRECTNESS_r06 came back all-green (49 hash + sim_ann_pq
-# rows-only by design), so nothing needed re-check front-loading.  Two
-# rows are front-loaded by explicit VERDICT r6 instruction instead:
-# ``embed_pca`` (item 1 — its rows-only driver row predates the r5
-# scalar re-encoding) and ``multimodal_decode_codec`` (item 5 — give
-# the real-codec imagecodec.py stack a hard driver row this cycle).
-# The remaining 48 slots are the head of the r6 overflow queue in its
-# documented order.
-_ROUND7_WINDOW = (
-    "embed_pca",
-    "multimodal_decode_codec",
-    "embed_drift_labels",
-    "text_url_normalize",
-    "win_pattern_match",
-    "graph_assortativity",
-    "agg_benford_profile",
-    "ts_seasonal_adjust",
-    "multimodal_phash_dedup",
-    "win_gaps_islands",
-    "embed_nearest_centroid_classify",
-    "stream_observe_metrics",
-    "geo_grid_neighbors",
-    "events_markov_transitions",
-    "events_active_users_rolling",
-    "events_survival_km",
-    "agg_cramers_v",
-    "agg_winsorized_mean",
-    "agg_bootstrap_se",
-    "text_ngram_novelty",
-    "topk_with_ties",
-    "events_burstiness",
-    "text_zipf_slope",
-    "agg_itemset_lift",
-    "graph_2hop_reach",
-    "ts_anomaly_pipeline",
-    "skyline_2d",
-    "multimodal_parse_header",
-    "text_hash_features",
-    "embed_random_projection",
-    "events_velocity_rule",
-    "events_ab_srm",
-    "scan_manifest_incremental_read",
-    "agg_theil_decomposition",
-    "events_ab_cuped",
-    "ts_backtest_snaive",
-    "join_exists_flags",
-    "multimodal_video_near_dup",
-    "agg_geometric_mean",
-    "agg_time_decay_mean",
-    "events_conversion_lag",
-    "profile_format_masks",
-    "ts_max_drawdown",
-    "events_new_vs_returning",
-    "text_entity_extract",
-    "win_weighted_moving_avg",
-    "agg_runs_test",
-    "agg_odds_ratio",
-    "text_js_divergence",
-    "win_hampel_filter",
-)
-
-# Round-8 window, promoted per the documented rotation recipe (VERDICT
-# r7 item 1): CORRECTNESS_r07 came back all-green (49 hash +
-# embed_pca rows-only by design), so nothing needed re-check
-# front-loading.  The window is exactly the first 50 entries of the r7
-# overflow queue in its documented order (join_reconciliation …
-# multimodal_video_y4m); the remaining 78 wait in _ROUND9_NEXT_UP.
-_ROUND8_WINDOW = (
-    "join_reconciliation",
-    "agg_capture_recapture",
-    "sample_neyman_allocation",
-    "ts_control_chart_imr",
-    "events_behavior_entropy_rate",
-    "audit_totals_reconcile",
-    "ts_seasonality_strength",
-    "text_heaps_law",
-    "events_funnel_windowed",
-    "ts_rolling_corr",
-    "events_audience_overlap",
-    "agg_simpson_diversity",
-    "ts_local_peaks",
-    # --- round-6 additions, appended in landing order ---
-    # (multimodal_decode_codec front-loaded into _ROUND7_WINDOW)
-    "win_pattern_match_var",
-    "sample_upsample_mixture",
-    "embed_centroid_topk",
-    "win_rolling_slope",
-    "interval_overlap_duration",
-    "join_range_grid",
-    "text_lang_id_trigram",
-    "scan_csv_quarantine",
-    "sink_jsonl_export",
-    "corpus_dup_health",
-    "embed_quantize_error",
-    "split_kfold_assign",
-    "layout_zone_overlap",
-    "stream_pattern_match",
-    "graph_adamic_adar",
-    "ts_period_over_period",
-    "agg_wilson_interval",
-    "join_interval_allen",
-    "ingest_reorg_detect",
-    "graph_preferential_attachment",
-    "events_cohort_ltv",
-    "agg_ratio_delta_method",
-    "ts_ljung_box",
-    "scan_footer_stats",
-    "embed_silhouette_simplified",
-    "events_error_budget_burn",
-    "dedup_incremental_snapshot",
-    "text_score_linear_model",
-    "agg_pareto_coverage",
-    "text_pmi",
-    "ts_interrupted_series",
-    "graph_modularity_segments",
-    "embed_retrieval_ndcg",
-    "scan_manifest_time_travel",
-    "stream_cdc_apply",
-    "multimodal_audio_wav",
-    "multimodal_video_y4m",
-)
-
-# Round-9 driver window: CORRECTNESS_r08 came back 50/50 green, so per
-# the written recipe there is nothing to front-load -- the first 50
-# entries of the r8 overflow queue promote verbatim.
-_ROUND9_WINDOW = (
-    "ingest_fee_summary",
-    "ingest_address_balance",
-    "ingest_entity_cospend",
-    "ingest_entity_summary",
-    "ingest_block_gaps",
-    "ingest_fiat_values",
-    "agg_cube_grouping_id",
-    "udf_pandas_iter",
-    "agg_median_of_means",
-    "ingest_fiat_values_asof",
-    "text_rare_token_mask",
-    "events_alert_throttle",
-    "ts_hierarchy_coherence",
-    "dedup_lsh_scurve",
-    "events_resurrection",
-    "text_vocab_overlap_sources",
-    "text_model_calibration_ece",
-    "text_model_auc",
-    "graph_jaccard_similarity",
-    "agg_spearman_corr",
-    "agg_two_proportion_z",
-    "ts_theil_sen_slope",
-    "events_stickiness",
-    "events_session_depth_hist",
-    "ts_ordinal_patterns",
-    "ts_sax_symbols",
-    "text_readability_fk",
-    "embed_cluster_purity",
-    "ingest_address_activity_span",
-    "ingest_balance_running_audit",
-    "agg_cohens_kappa",
-    "agg_poisson_dispersion",
-    "ts_durbin_watson",
-    "events_interarrival_hist",
-    "text_type_token_ratio",
-    "graph_degree_gini",
-    "split_temporal_holdout",
-    "embed_dim_variance_profile",
-    "stream_tumbling_distinct",
-    "dedup_minhash_jaccard_estimate",
-    "anon_t_closeness",
-    "sample_balanced_classes",
-    "win_streak_longest",
-    "corpus_quality_report",
-    "text_lang_confusion",
-    "agg_jackknife_ratio_se",
-    "ts_cross_correlation_lagged",
-    "multimodal_audio_features",
-    "ingest_block_interval_stats",
-    "ingest_coinbase_subsidy_check",
-)
-
 # Remaining overflow queue after the round-9 window (any round-9
-# additions append in landing order).  SINCE ROUND 10 the rotation
-# recipe is EXECUTABLE CODE, not prose: compute_window_order() below
-# orders the live registry RED -> ORACLE-RETIRED -> NEVER-CHECKED
-# (this queue's order) -> oldest-green re-check, straight from the
+# additions append in landing order).  The rotation recipe is
+# EXECUTABLE CODE, not prose: compute_window_order() below orders the
+# live registry RED -> ORACLE-RETIRED -> NEVER-CHECKED (this queue's
+# order) -> oldest-green re-check, straight from the
 # CORRECTNESS_r*.json ledgers, and load_all_operators() applies it.
-# These static tuples remain only as (a) the never-checked landing
-# order and (b) the fallback when no ledgers are readable (bare
-# checkout).  scripts/next_window.py previews the same ordering.
+# The queue tuples below are only the never-checked landing order.
+# scripts/next_window.py previews the same ordering.
 _ROUND10_NEXT_UP = (
     "rank_biased_overlap",
     "agg_quantiles_grouped",
@@ -859,8 +553,8 @@ def compute_window_order() -> list[str]:
     queue drains.
 
     Must be called after operator modules are imported (QUERIES full).
-    Raises on unreadable ledgers; the caller falls back to the static
-    window tuples in that case.
+    Raises on unreadable ledgers; the caller then keeps registration
+    order.
     """
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     last = _ledger_last_seen(repo_root)
@@ -906,9 +600,8 @@ def load_all_operators() -> None:
     order the registry so the driver's capped per-round sweep lands on
     (1) red rows, (2) oracle-retired rows, (3) never-checked rows,
     (4) oldest-green re-checks — computed mechanically from the
-    CORRECTNESS_r*.json ledgers (compute_window_order); the static
-    window tuples above are the fallback if the ledgers are unreadable
-    (e.g. a bare checkout without driver artifacts)."""
+    CORRECTNESS_r*.json ledgers (compute_window_order); if the ledgers
+    are unreadable the registry keeps registration order."""
     global _loaded
     if _loaded:
         return
@@ -918,20 +611,16 @@ def load_all_operators() -> None:
         pinned = compute_window_order()
     except (OSError, ValueError, KeyError, json.JSONDecodeError) as exc:
         # Narrow catch (ADVICE r10): only unreadable/malformed ledgers
-        # fall back to the static tuples, and loudly — a regression in
+        # fall back to registration order, and loudly — a regression in
         # the ordering code itself must not silently sweep a stale
         # window.
         warnings.warn(
-            f"compute_window_order() failed ({exc!r}); falling back to "
-            "static window tuples",
+            f"compute_window_order() failed ({exc!r}); keeping "
+            "registration order",
             RuntimeWarning,
             stacklevel=2,
         )
-        pinned = [
-            q
-            for q in _ROUND9_WINDOW + _ROUND10_NEXT_UP + _ROUND8_WINDOW + _ROUND7_WINDOW + _ROUND6_WINDOW + _ROUND5_WINDOW
-            if q in QUERIES
-        ]
+        pinned = []
     rest = [q for q in QUERIES if q not in set(pinned)]
     reordered = {q: QUERIES[q] for q in [*pinned, *rest]}
     QUERIES.clear()

@@ -94,9 +94,17 @@ def stream_state_partitions(spark: SparkSession, src_path: str) -> int:
     parallelism knob (at deployment scale that conf is sized to the
     cluster, so a 100 TB feed lands on cluster parallelism while every
     fixture SF keeps the measured local count — the label_propagate
-    scale-adaptive precedent)."""
+    scale-adaptive precedent).  A directory source (multi-file
+    parquet) counts the bytes of every member file."""
     try:
-        size = os.path.getsize(src_path)
+        if os.path.isdir(src_path):
+            size = sum(
+                os.path.getsize(os.path.join(root, name))
+                for root, _dirs, files in os.walk(src_path)
+                for name in files
+            )
+        else:
+            size = os.path.getsize(src_path)
     except OSError:
         size = 0
     try:

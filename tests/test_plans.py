@@ -766,6 +766,31 @@ def test_no_broadcast_hints_on_scaling_frames():
     assert not hits, "\n".join(hits)
 
 
+
+def test_shared_graph_frames_built_once():
+    """The co-purchase bipartite frame, its within-part pair join and
+    the co-occurrence tx projection each have one builder
+    (graphstats._copurchase_bipartite / _copurchase_pairs,
+    facade._tx_addresses).  An inline copy of any of them fails here.
+    Adamic–Adar keeps its own weighted pair join, so that predicate may
+    appear twice.  Whitespace is ignored, so a re-wrapped copy counts."""
+    import glob
+    import os
+
+    limits = {
+        'F.col("o_custkey").alias("cust"),F.col("l_partkey").alias("part")': 1,
+        'F.col("a.part")==F.col("b.part")': 2,
+        '.select("tx.tx_hash","tx.inputs","tx.outputs")': 1,
+    }
+    pkg = os.path.join(os.path.dirname(__file__), "..", "graphsense_datafeed_spark")
+    counts = dict.fromkeys(limits, 0)
+    for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        text = "".join(open(p).read().split())
+        for pattern in limits:
+            counts[pattern] += text.count(pattern)
+    over = {k: n for k, n in counts.items() if n > limits[k]}
+    assert not over, over
+
 def test_round10_allocation_windows_share_one_exchange(spark, sf_dir):
     """join_proportional_allocation's three windows (line sum,
     remainder rank, floor-alloc sum) all partition by l_orderkey — the

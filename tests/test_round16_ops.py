@@ -159,6 +159,26 @@ class TestStreamStatePartitions:
         monkeypatch.setattr(w.os.path, "getsize", boom)
         assert w.stream_state_partitions(spark, "gone") == 8
 
+    def test_directory_source_sums_member_files(self, spark, tmp_path):
+        """A multi-file parquet source is a directory: its size is the
+        sum of its member files, not the directory entry's."""
+        import os
+
+        import graphsense_datafeed_spark.streaming.windows as w
+
+        src = tmp_path / "events.parquet"
+        src.mkdir()
+        for i in range(2):  # sparse: no disk blocks are written
+            with open(src / f"part-{i}.parquet", "wb") as fh:
+                fh.truncate(600 * 1024 * 1024)
+        assert os.path.getsize(src) < 64 * 1024 * 1024
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "64")
+        try:
+            assert w.stream_state_partitions(spark, str(src)) == 19
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
     def test_events_stream_stashes_count(self, spark, sf_dir):
         import graphsense_datafeed_spark.streaming.windows as w
 
@@ -203,3 +223,47 @@ class TestUdtfGroupedMapCarry:
             )
         )
         assert got == want
+
+    def test_null_user_ids_match_duckdb_oracle(self, spark, sf_dir, tmp_path):
+        """Null keys form one group in the oracle's PARTITION BY.  With
+        tiny Arrow batches the null run spans many batches, so the carry
+        must compare keys null-safely and the grouping must keep nulls."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from graphsense_datafeed_spark.functions.udfs import udtf_grouped_map
+
+        t = pq.read_table(f"{sf_dir}/events.parquet")
+        uid = t["user_id"]
+        # every user id divisible by 4 becomes null: one null group
+        nulled = pc.if_else(
+            pc.equal(pc.bit_wise_and(uid, 3), 0), pa.scalar(None, uid.type), uid
+        )
+        t = t.set_column(t.schema.get_field_index("user_id"), "user_id", nulled)
+        assert t["user_id"].null_count > 3 * 7  # spans several 7-row batches
+        pq.write_table(t, tmp_path / "events.parquet")
+
+        prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        try:
+            got = udtf_grouped_map(spark, str(tmp_path)).collect()
+        finally:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+        con = duckdb.connect()
+        con.sql(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'events.parquet'}')"
+        )
+        want = con.sql(registry.ORACLES["udtf_grouped_map"]).fetchall()
+        con.close()
+
+        def key(r):
+            return tuple((v is None, v) for v in r)
+
+        cols = ("user_id", "event_id", "purchases_so_far")
+        assert sorted((tuple(r[c] for c in cols) for r in got), key=key) == sorted(
+            want, key=key
+        )

@@ -231,3 +231,24 @@ def test_oracle_retired_rows_front_load_before_queue():
     nevers = [q for q in registry.QUERIES if q not in last]
     if retired and nevers:
         assert max(idx[q] for q in retired) < min(idx[q] for q in nevers)
+
+
+def test_unreadable_ledgers_keep_registration_order(monkeypatch):
+    """When the ledgers cannot be read, load_all_operators warns and
+    keeps every registered query, in the order it already has."""
+    import pytest
+
+    def unreadable():
+        raise OSError("ledgers unreadable")
+
+    before = dict(registry.QUERIES)
+    monkeypatch.setattr(registry, "compute_window_order", unreadable)
+    monkeypatch.setattr(registry, "_loaded", False)
+    try:
+        with pytest.warns(RuntimeWarning, match="registration order"):
+            registry.load_all_operators()
+        assert set(registry.QUERIES) == set(before)
+        assert list(registry.QUERIES) == list(before)
+    finally:
+        registry.QUERIES.clear()
+        registry.QUERIES.update(before)
