@@ -23,10 +23,11 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
 from dataclasses import replace
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
 from graphsense_datafeed_spark.registry import query
@@ -195,37 +196,62 @@ def stream_ingest_blocks(
     daemon restart mid-feed resumes without double-applying a batch
     (soaked in tests/test_streaming.py).
 
-    Scale: block headers are tiny next to tx payloads; the per-batch
-    shuffle is keyed on height within affected buckets only, and the
-    bucket count bounds file-listing pressure on the target."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    Two jobs per micro-batch:
+    1. the probe — a no-op pass over the batch whose Observation
+       returns the affected buckets (``collect_set(hbucket)``);
+    2. the upsert — the existing rows are read from the
+       ``hbucket=<b>`` directories of those buckets only, with the
+       known schema (no inference, no listing of the table), unioned
+       with the batch, coalesced to ONE partition and ranked; a single
+       partition already satisfies the window's clustering, so the
+       window and the write run as one job with no exchange.
+
+    The single partition is safe at any chain length: a batch holds
+    its triggered headers plus at most one winner row per height of
+    its affected buckets (≤ ``bucket`` rows each), so its size is set
+    by the trigger and ``bucket``, never by the table.  The overwrite
+    mode rides on the write itself, so the session's other writers
+    keep their static default."""
+    existing_schema = BLOCK_FEED_SCHEMA + ", hbucket bigint"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.withColumn(
             "hbucket", F.expr(f"height DIV {bucket}")
         )
-        buckets = [r["hbucket"] for r in batch.select("hbucket").distinct().collect()]
+        probe = Observation()
+        (
+            batch.observe(probe, F.collect_set("hbucket").alias("buckets"))
+            .write.format("noop").mode("overwrite").save()
+        )
+        buckets = probe.get["buckets"]
         if not buckets:
             return
-        import os as _os
-
+        paths = [
+            p
+            for p in (os.path.join(target_dir, f"hbucket={b}") for b in buckets)
+            if os.path.isdir(p)
+        ]
         merged = batch
-        if _os.path.exists(_os.path.join(target_dir, "_SUCCESS")) or any(
-            name.startswith("hbucket=") for name in (
-                _os.listdir(target_dir) if _os.path.isdir(target_dir) else []
-            )
-        ):
-            existing = spark.read.parquet(target_dir).filter(
-                F.col("hbucket").isin(buckets)
+        if paths:
+            existing = (
+                spark.read.schema(existing_schema)
+                .option("basePath", target_dir)
+                .parquet(*paths)
             )
             merged = batch.unionByName(existing)
         w = Window.partitionBy("height").orderBy(F.col("ingest_seq").desc())
         winners = (
-            merged.withColumn("rnk", F.row_number().over(w))
+            merged.coalesce(1)
+            .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") == 1)
             .drop("rnk")
         )
-        winners.write.mode("overwrite").partitionBy("hbucket").parquet(target_dir)
+        (
+            winners.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("hbucket")
+            .parquet(target_dir)
+        )
 
     q = (
         spark.readStream.schema(BLOCK_FEED_SCHEMA)
@@ -674,7 +700,6 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture feed is clean, so a poisoned copy (2 broken lines) is
     staged alongside it; the oracle reads the CLEAN file and the query
     must recover exactly the clean rows and quarantine the rest."""
-    import os
     import tempfile
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -723,7 +748,6 @@ def ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     availableNow here = the bulk/full-sync run; the identical query
     with a continuous trigger is the live daemon (SURVEY §3.2-2)."""
-    import os
     import shutil
     import tempfile
     import uuid
@@ -798,7 +822,6 @@ def stream_rates_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same foreachBatch + dynamic-partition-overwrite shape is the
     100 TB block-reingest path (see ``sink_partitioned_overwrite``)."""
     import csv
-    import os
     import shutil
     import tempfile
     import uuid
@@ -861,7 +884,6 @@ def sink_cassandra(spark: SparkSession, sf_dir: str) -> DataFrame:
     connector config and its construction/options are unit-tested.
     Returns the re-read block table (write verified by identity in
     tests; rows-only here)."""
-    import os
     import tempfile
 
     out = os.path.join(tempfile.gettempdir(), "gds_ingest_sink")
@@ -1271,7 +1293,6 @@ def ingest_reorg_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     headers are tiny next to tx payloads; the orphan set is
     reorg-depth-sized."""
     import json as _json
-    import os
     import tempfile
 
     from graphsense_datafeed_spark.sources.tables import source_fingerprint

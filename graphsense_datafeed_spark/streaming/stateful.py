@@ -22,6 +22,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.streaming.windows import (
+    events_state_partitions,
     read_events_stream,
     run_stream_to_memory,
 )
@@ -75,7 +76,9 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_stream_to_memory(spark, updated, "update")
+    out = run_stream_to_memory(
+        spark, updated, "update", events_state_partitions(spark, sf_dir)
+    )
     # Multiple micro-batches emit one row per (user, batch); the final
     # state per user is the last emission == max n_events.
     import pyspark.sql.functions as F
@@ -196,7 +199,9 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    out = run_stream_to_memory(spark, updated, "update")
+    out = run_stream_to_memory(
+        spark, updated, "update", events_state_partitions(spark, sf_dir)
+    )
 
     import pyspark.sql.functions as F
     from pyspark.sql import Window
@@ -242,7 +247,9 @@ def _stateful_totals_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_stream_to_memory(spark, updated, "update")
+    out = run_stream_to_memory(
+        spark, updated, "update", events_state_partitions(spark, sf_dir)
+    )
 
     import pyspark.sql.functions as F
     from pyspark.sql import Window
@@ -373,7 +380,9 @@ def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_stream_to_memory(spark, updated, "append")
+    return run_stream_to_memory(
+        spark, updated, "append", events_state_partitions(spark, sf_dir)
+    )
 
 
 @query(

@@ -63,17 +63,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch runs). The unit probe runs on the batch source file —
     readStream cannot infer, and the staged dir symlinks that file.
 
-    Also derives the SCALE-ADAPTIVE state-partition count from the
-    measured source size and stashes it on the session (see
-    stream_state_partitions) — the one place every stream's input size
-    is known, so run_stream_to_memory's 16 call sites stay unchanged."""
+    The stream's state-partition count is sized from the same source
+    by ``events_state_partitions`` and passed to the runner by the
+    caller — it reaches only the stream it was derived for."""
     ensure_runtime_confs(spark)
-    src = path_for(sf_dir, "events")
-    unit = events_ts_unit(spark, src)
-    spark.conf.set(
-        "gds.stream.statePartitions",
-        str(stream_state_partitions(spark, src)),
-    )
+    unit = events_ts_unit(spark, path_for(sf_dir, "events"))
     schema = EVENTS_RAW if unit == "ns" else EVENTS_US
     raw = spark.readStream.schema(schema).parquet(_events_stream_dir(sf_dir))
     return normalize_events_ts(raw, unit)
@@ -115,8 +109,17 @@ def stream_state_partitions(spark: SparkSession, src_path: str) -> int:
     return max(_STREAM_STATE_PARTITIONS, min(cap, derived))
 
 
+def events_state_partitions(spark: SparkSession, sf_dir: str) -> int:
+    """The state-partition count for a stream over the events table,
+    sized from its source file (see stream_state_partitions)."""
+    return stream_state_partitions(spark, path_for(sf_dir, "events"))
+
+
 def run_stream_to_memory(
-    spark: SparkSession, sdf: DataFrame, output_mode: str
+    spark: SparkSession,
+    sdf: DataFrame,
+    output_mode: str,
+    state_partitions: int = _STREAM_STATE_PARTITIONS,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
     a memory sink and return the final result as a batch DataFrame.
@@ -125,22 +128,19 @@ def run_stream_to_memory(
     partition PER micro-batch, and micro-batch plans get no AQE
     coalescing — at the batch default (32 here, 200 upstream) that is
     pure fixed overhead when the state key space is small (hours ×
-    event types). The stream runs with a right-sized partition count
-    instead (measured 0.89s vs 1.5-7s per run at sf0.1); the state
-    partition count is also FROZEN into the checkpoint at first run,
-    which is why production sizes it to expected key cardinality ×
-    executor count up front rather than inheriting the batch default.
-    The batch setting is restored afterwards — streaming queries here
-    run to completion, never concurrently with a batch plan."""
+    event types). The stream runs with ``state_partitions`` instead
+    (measured 0.89s vs 1.5-7s per run at sf0.1): events streams pass
+    the size-derived events_state_partitions, other sources (rate/test
+    frames) keep the constant floor.  The state partition count is
+    also FROZEN into the checkpoint at first run, which is why
+    production sizes it to expected key cardinality × executor count
+    up front rather than inheriting the batch default.  The batch
+    setting is restored afterwards — streaming queries here run to
+    completion, never concurrently with a batch plan."""
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # size-derived count stashed by read_events_stream; the constant
-    # floor covers streams built from other sources (rate/test frames)
-    n_state = spark.conf.get(
-        "gds.stream.statePartitions", str(_STREAM_STATE_PARTITIONS)
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", n_state)
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = (
             sdf.writeStream.format("memory")
@@ -178,7 +178,9 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(F.floor("value").cast("bigint")).cast("bigint").alias("val_floor_sum"),
     )
-    out = run_stream_to_memory(spark, agg, "complete")
+    out = run_stream_to_memory(
+        spark, agg, "complete", events_state_partitions(spark, sf_dir)
+    )
     return out.select(
         F.col("window.start").alias("win_start"),
         F.col("window.end").alias("win_end"),
@@ -205,7 +207,9 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = s.groupBy(F.window("ts", "1 hour", "15 minutes")).agg(
         F.count("*").alias("n_events")
     )
-    out = run_stream_to_memory(spark, agg, "complete")
+    out = run_stream_to_memory(
+        spark, agg, "complete", events_state_partitions(spark, sf_dir)
+    )
     return out.select(F.col("window.start").alias("win_start"), "n_events")
 
 
@@ -270,7 +274,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "user_id", "event_type", F.col("ts").cast("timestamp_ntz").alias("ts")
         )
     )
-    return run_stream_to_memory(spark, dedup, "append")
+    return run_stream_to_memory(
+        spark, dedup, "append", events_state_partitions(spark, sf_dir)
+    )
 
 
 @query(
@@ -290,7 +296,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = s.join(
         cust, s.user_id == cust.c_custkey
     ).select("event_id", "user_id", "value", "c_name", "c_mktsegment")
-    return run_stream_to_memory(spark, joined, "append")
+    return run_stream_to_memory(
+        spark, joined, "append", events_state_partitions(spark, sf_dir)
+    )
 
 
 @query(
@@ -327,7 +335,9 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count("*").alias("n_events"))
     )
-    out = run_stream_to_memory(spark, agg, "append")
+    out = run_stream_to_memory(
+        spark, agg, "append", events_state_partitions(spark, sf_dir)
+    )
     return out.select(
         F.col("window.start").cast("timestamp_ntz").alias("win_start"), "n_events"
     )
@@ -476,7 +486,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
         F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
     )
-    return run_stream_to_memory(spark, joined, "append")
+    return run_stream_to_memory(
+        spark, joined, "append", events_state_partitions(spark, sf_dir)
+    )
 
 
 def run_observed_stream(spark: SparkSession, sf_dir: str):
@@ -519,10 +531,7 @@ def run_observed_stream(spark: SparkSession, sf_dir: str):
     ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        spark.conf.get(
-            "gds.stream.statePartitions", str(_STREAM_STATE_PARTITIONS)
-        ),
+        "spark.sql.shuffle.partitions", str(events_state_partitions(spark, sf_dir))
     )
     try:
         q = (
@@ -609,7 +618,9 @@ def stream_tumbling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = dedup.groupBy("win_start").agg(
         F.count("*").cast("bigint").alias("n_users")
     )
-    out = run_stream_to_memory(spark, agg, "complete")
+    out = run_stream_to_memory(
+        spark, agg, "complete", events_state_partitions(spark, sf_dir)
+    )
     return out.select("win_start", "n_users")
 
 
@@ -651,7 +662,9 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = s.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").cast("bigint").alias("n_events")
     )
-    out = run_stream_to_memory(spark, agg, "complete")
+    out = run_stream_to_memory(
+        spark, agg, "complete", events_state_partitions(spark, sf_dir)
+    )
     w = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), "event_type"
     )
@@ -711,7 +724,9 @@ def stream_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("value_e4"),
     )
-    out = run_stream_to_memory(spark, hourly, "complete")
+    out = run_stream_to_memory(
+        spark, hourly, "complete", events_state_partitions(spark, sf_dir)
+    )
     return (
         out.select(
             F.col("w.start").alias("h"), "event_type", "n_events", "value_e4"
@@ -851,4 +866,6 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("arm")
         .agg(F.count("*").cast("bigint").alias("n_users"))
     )
-    return run_stream_to_memory(spark, agg, "complete").orderBy("arm")
+    return run_stream_to_memory(
+        spark, agg, "complete", events_state_partitions(spark, sf_dir)
+    ).orderBy("arm")

@@ -179,11 +179,14 @@ class TestStreamStatePartitions:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    def test_events_stream_stashes_count(self, spark, sf_dir):
+    def test_events_stream_count_is_passed(self, spark, sf_dir):
+        """The events count is sized for the runner, not stashed on the
+        session where a later stream would inherit it."""
         import graphsense_datafeed_spark.streaming.windows as w
 
         w.read_events_stream(spark, sf_dir)
-        assert int(spark.conf.get("gds.stream.statePartitions")) == 8
+        assert spark.conf.get("gds.stream.statePartitions", None) is None
+        assert w.events_state_partitions(spark, sf_dir) == 8
 
 
 class TestUdtfGroupedMapCarry:

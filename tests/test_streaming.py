@@ -1008,3 +1008,166 @@ def test_stream_reorg_daemon_restart_resumes_exactly_once(spark, tmp_path):
 
     stream_ingest_blocks(spark, feed, target, ckpt)  # no new files
     assert _block_table_rows(spark, target) == got
+
+
+def _next_job_id(spark):
+    """The id the scheduler gives the next job.  The streaming thread
+    runs its micro-batches under its own job group, so a job-group
+    count from the calling thread cannot see them; the id difference
+    across a drain counts every job it ran."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_stream_daemon_two_jobs_per_batch(spark, tmp_path):
+    """The daemon's job budget: each micro-batch is one observed probe
+    (the affected buckets) and one upsert (the window and the write in
+    a single job) — at most 2 jobs per batch over the reorg-soak feed."""
+    from graphsense_datafeed_spark.ingest.facade import stream_ingest_blocks
+
+    feed = str(tmp_path / "feed")
+    ckpt = str(tmp_path / "ckpt")
+    _stage_reorg_feed(feed, upto_file=4)
+    first = _next_job_id(spark)
+    stream_ingest_blocks(spark, feed, str(tmp_path / "block_table"), ckpt)
+    jobs = _next_job_id(spark) - first
+    batches = len([n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()])
+    assert batches == 4
+    assert jobs <= 2 * batches, f"{jobs} jobs for {batches} micro-batches"
+
+
+def _write_header_file(feed_dir, i, rows):
+    """One mtime-ordered jsonl feed file of (height, ingest_seq) headers."""
+    import json
+
+    os.makedirs(feed_dir, exist_ok=True)
+    path = os.path.join(feed_dir, f"feed_{i}.jsonl")
+    with open(path, "w") as out:
+        for height, seq in rows:
+            rec = {
+                "height": height,
+                "block_hash": f"{height:060x}{seq:04x}",
+                "timestamp": 1_231_006_505 + height * 600,
+                "no_transactions": 1 + seq % 3,
+                "ingest_seq": seq,
+            }
+            out.write(json.dumps(rec) + "\n")
+    os.utime(path, (5_000_000 + i * 1000, 5_000_000 + i * 1000))
+
+
+@pytest.mark.parametrize(
+    "files",
+    [
+        pytest.param([[]], id="zero-row-file"),
+        pytest.param([[(h, h) for h in range(30)]], id="first-batch-missing-target"),
+        pytest.param(
+            [
+                [(h, h) for h in range(40)],
+                # re-announces heights 10/20 of bucket 0, opens bucket 1
+                [(10, 100), (20, 101)] + [(h, 100 + h) for h in range(50, 56)],
+            ],
+            id="reorg-and-new-bucket",
+        ),
+    ],
+)
+def test_stream_daemon_per_bucket_read_matches_batch(spark, tmp_path, files):
+    """The per-bucket read of existing rows at its edges: a zero-row
+    feed file writes nothing, a first batch creates the missing target,
+    and one batch that rewrites heights of an existing bucket while
+    opening a new one converges to the batch ingest of the feed."""
+    from graphsense_datafeed_spark.ingest.facade import (
+        batch_ingest_blocks,
+        stream_ingest_blocks,
+    )
+
+    feed = str(tmp_path / "feed")
+    target = str(tmp_path / "missing" / "block_table")
+    for i, rows in enumerate(files):
+        _write_header_file(feed, i, rows)
+    stream_ingest_blocks(spark, feed, target, str(tmp_path / "ckpt"))
+    want = sorted(
+        (r["height"], r["block_hash"], r["ingest_seq"])
+        for r in batch_ingest_blocks(spark, feed).collect()
+    )
+    if not want:
+        assert not os.path.exists(target)
+        return
+    assert _block_table_rows(spark, target) == want
+
+
+def test_daemon_leaves_sink_overwrite_static(spark, tmp_path):
+    """The daemon's dynamic partition overwrite must stay on its own
+    write: a later partitioned ParquetSink overwrite of {A, B} with {B}
+    in the same session still replaces the whole table."""
+    from graphsense_datafeed_spark.ingest.facade import stream_ingest_blocks
+    from graphsense_datafeed_spark.sources.sinks import ParquetSink
+
+    _write_header_file(str(tmp_path / "feed"), 0, [(h, h) for h in range(5)])
+    stream_ingest_blocks(
+        spark, str(tmp_path / "feed"), str(tmp_path / "block_table"),
+        str(tmp_path / "ckpt"),
+    )
+    sink = ParquetSink(str(tmp_path / "sink"), partition_col="p")
+    schema = "k bigint, p string"
+    sink.write(spark.createDataFrame([(1, "A"), (2, "B")], schema), "t", ["k"])
+    sink.write(spark.createDataFrame([(3, "B")], schema), "t", ["k"])
+    back = spark.read.parquet(str(tmp_path / "sink" / "t")).collect()
+    assert sorted((r["k"], r["p"]) for r in back) == [(3, "B")]
+
+
+def test_events_state_partitions_stay_with_their_stream(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """The events-derived state-partition count reaches only the
+    events stream it was derived for: a later stream from another
+    source runs with the floor."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    import graphsense_datafeed_spark.streaming.windows as w
+
+    class StatePartitions(StreamingQueryListener):
+        def __init__(self):
+            self.seen = {}
+            self.done = set()
+            self.cond = threading.Condition()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            with self.cond:
+                for op in event.progress.stateOperators:
+                    self.seen.setdefault(event.progress.name, set()).add(
+                        op.numShufflePartitions
+                    )
+
+        def onQueryTerminated(self, event):
+            with self.cond:
+                self.done.add(str(event.id))
+                self.cond.notify_all()
+
+        def wait(self, n):
+            with self.cond:
+                assert self.cond.wait_for(lambda: len(self.done) >= n, timeout=60)
+            return self.seen
+
+    monkeypatch.setattr(w, "stream_state_partitions", lambda spark, src: 13)
+    listener = StatePartitions()
+    frame = str(tmp_path / "frame")
+    spark.createDataFrame(
+        [(i, i % 3) for i in range(30)], "k bigint, g bigint"
+    ).write.parquet(frame)
+    spark.streams.addListener(listener)
+    try:
+        w.stream_tumbling(spark, sf_dir).collect()
+        later = (
+            spark.readStream.schema("k bigint, g bigint").parquet(frame)
+            .groupBy("g").agg(F.count("*").alias("n"))
+        )
+        rows = run_stream_to_memory(spark, later, "complete").collect()
+        seen = listener.wait(2)
+    finally:
+        spark.streams.removeListener(listener)
+    assert sorted((r["g"], r["n"]) for r in rows) == [(0, 10), (1, 10), (2, 10)]
+    assert sorted(seen.values(), key=min) == [{w._STREAM_STATE_PARTITIONS}, {13}]
