@@ -101,12 +101,15 @@ def main() -> None:
 
     _warm = F.pandas_udf(lambda s: s, "long")
     spark.range(64).repartition(32).select(_warm("id")).count()
-    # ...and the mapInArrow worker pool: Spark spawns a SEPARATE
-    # Python worker set for the MapInArrow eval type (measured r15:
-    # the first mapInArrow query in a session pays ~2.5-4 s of pool
-    # spawn that the pandas_udf warm-up above does not cover; the
-    # same trivial query re-run costs ~0.5 s). Session setup, not
-    # query cost — same contract as the pandas_udf warm-up.
+    # ...and the first mapInArrow query, which the pandas_udf warm-up
+    # above does not cover (measured r15: ~2.5-4 s; a re-run ~0.5 s).
+    # Much of it is not a pool spawn but per task: each worker task
+    # re-read pyspark.zip's directory once per zipimporter
+    # (importlib.invalidate_caches), which build_session's worker
+    # daemon skips for unchanged archives (session.py; measured on 4
+    # cores: this step 3.4-3.6 -> 2.1 s, its re-run 1.6 -> 0.8 s).
+    # Session setup, not query cost — same contract as the pandas_udf
+    # warm-up.
 
     def _warm_arrow(batches):
         yield from batches
@@ -137,6 +140,10 @@ def main() -> None:
                 "queries": per_query,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "cache": "hot" if cache_hot else "cold",
+                "cpus": len(os.sched_getaffinity(0))
+                if hasattr(os, "sched_getaffinity")
+                else os.cpu_count(),
+                "master": spark.sparkContext.master,
             }
         )
     )

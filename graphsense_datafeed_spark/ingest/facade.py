@@ -1730,7 +1730,7 @@ def ingest_block_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), rates AS (
         SELECT CAST(date AS DATE) AS rate_date,
                CAST(usd AS DOUBLE) AS usd, CAST(eur AS DOUBLE) AS eur
-        FROM read_csv('/root/repo/fixtures/rates.csv', header=true)
+        FROM read_csv('{RATES_CSV}', header=true)
     )
     SELECT o.height, o.block_date, o.total_out_satoshi,
            CAST(FLOOR(CAST(o.total_out_satoshi AS DOUBLE) / 100000000.0
@@ -1810,7 +1810,7 @@ def ingest_fiat_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), gappy_rates AS (
         SELECT CAST(date AS DATE) AS rate_date,
                CAST(usd AS DOUBLE) AS usd
-        FROM read_csv('/root/repo/fixtures/rates.csv', header=true)
+        FROM read_csv('{RATES_CSV}', header=true)
         WHERE dayofmonth(CAST(date AS DATE)) % 5 <> 2
     )
     SELECT o.height, o.block_date, o.total_out_satoshi,
@@ -3767,7 +3767,7 @@ def ingest_monetary_velocity(
         FROM addr a LEFT JOIN ins i USING (address)
     ), rates AS (
         SELECT CAST(date AS DATE) AS rate_date, CAST(usd AS DOUBLE) AS usd
-        FROM read_csv('/root/repo/fixtures/rates.csv', header=true)
+        FROM read_csv('{RATES_CSV}', header=true)
     ), held AS (
         SELECT b.address, b.balance,
                CAST(FLOOR(CAST(b.balance AS DOUBLE) / 100000000.0
@@ -4057,7 +4057,7 @@ def ingest_taint_haircut(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2, 3
     ), rates AS (
         SELECT CAST(date AS DATE) AS rate_date, CAST(usd AS DOUBLE) AS usd
-        FROM read_csv('/root/repo/fixtures/rates.csv', header=true)
+        FROM read_csv('{RATES_CSV}', header=true)
     ), priced AS (
         SELECT b.spend_day, b.sat,
                CAST(FLOOR(CAST(b.sat AS DOUBLE) / 100000000.0
@@ -4206,7 +4206,7 @@ def ingest_sopr(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM days
     ), rates AS (
         SELECT CAST(date AS DATE) AS rate_date, CAST(usd AS DOUBLE) AS usd
-        FROM read_csv('/root/repo/fixtures/rates.csv', header=true)
+        FROM read_csv('{RATES_CSV}', header=true)
     )
     SELECT c.d, c.supply_sat, c.vol_sat,
            CAST(FLOOR(CAST(c.supply_sat AS DOUBLE) / 100000000.0

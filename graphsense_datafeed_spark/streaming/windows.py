@@ -120,6 +120,7 @@ def run_stream_to_memory(
     sdf: DataFrame,
     output_mode: str,
     state_partitions: int = _STREAM_STATE_PARTITIONS,
+    progress: list | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
     a memory sink and return the final result as a batch DataFrame.
@@ -136,7 +137,8 @@ def run_stream_to_memory(
     production sizes it to expected key cardinality × executor count
     up front rather than inheriting the batch default.  The batch
     setting is restored afterwards — streaming queries here run to
-    completion, never concurrently with a batch plan."""
+    completion, never concurrently with a batch plan.  A ``progress``
+    list receives the drained query's ``recentProgress``."""
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -151,6 +153,8 @@ def run_stream_to_memory(
             .start()
         )
         q.awaitTermination()
+        if progress is not None:
+            progress.extend(q.recentProgress)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     result = spark.table(name)
@@ -522,39 +526,18 @@ def run_observed_stream(spark: SparkSession, sf_dir: str):
             .alias("cents_sum"),
         )
     )
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    name = "s" + uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(events_state_partitions(spark, sf_dir))
+    progress: list = []
+    result = run_stream_to_memory(
+        spark, agg, "complete", events_state_partitions(spark, sf_dir), progress
     )
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        totals = {"n_rows": 0, "total_cents": 0, "n_bad": 0, "n_batches": 0}
-        for prog in q.recentProgress:
-            m = (prog.get("observedMetrics") or {}).get("stream_qa")
-            if m:
-                totals["n_rows"] += m["n_rows"]
-                totals["total_cents"] += m["total_cents"]
-                totals["n_bad"] += m["n_bad"]
-                totals["n_batches"] += 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    totals = {"n_rows": 0, "total_cents": 0, "n_bad": 0, "n_batches": 0}
+    for prog in progress:
+        m = (prog.get("observedMetrics") or {}).get("stream_qa")
+        if m:
+            totals["n_rows"] += m["n_rows"]
+            totals["total_cents"] += m["total_cents"]
+            totals["n_bad"] += m["n_bad"]
+            totals["n_batches"] += 1
     return result, totals
 
 

@@ -791,6 +791,42 @@ def test_shared_graph_frames_built_once():
     over = {k: n for k, n in counts.items() if n > limits[k]}
     assert not over, over
 
+def test_oracles_follow_the_checkout(tmp_path):
+    """Every file path in the oracle SQL comes from the path constants
+    (sources/scans.py), so an oracle reads the fixtures of the checkout
+    it runs from.  The registry is loaded in a subprocess through a
+    symlink to this checkout: a path written out in the SQL keeps the
+    real root and fails here."""
+    import json
+    import os
+    import re
+    import subprocess
+    import sys
+
+    root = os.path.realpath(os.path.join(os.path.dirname(__file__), ".."))
+    alt = tmp_path / "checkout"
+    alt.symlink_to(root)
+    dump = tmp_path / "oracles.json"
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]); "
+        "from graphsense_datafeed_spark import registry; "
+        "registry.load_all_operators(); "
+        "json.dump(dict(registry.ORACLES), open(sys.argv[2], 'w'))"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code, str(alt), str(dump)],
+        cwd=tmp_path, check=True, capture_output=True,
+    )
+    oracles = json.loads(dump.read_text())
+    stray = {
+        qid: path
+        for qid, sql in oracles.items()
+        for path in re.findall(r"'(/[^'/]+/[^']*)'", sql)
+        if not path.startswith(str(alt) + os.sep)
+    }
+    assert len(oracles) > 800 and not stray, stray
+
+
 def test_round10_allocation_windows_share_one_exchange(spark, sf_dir):
     """join_proportional_allocation's three windows (line sum,
     remainder rank, floor-alloc sum) all partition by l_orderkey — the
