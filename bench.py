@@ -93,22 +93,24 @@ def main() -> None:
 
     load(spark, sf_dir, "lineitem").count()
     load(spark, sf_dir, "events").count()
-    # ...and the Python/Arrow worker pool (first pandas_udf call spawns
-    # workers; that's session setup, not query cost).
+    # This pandas_udf step starts no Python worker: .count() prunes the
+    # unused UDF column, so its physical plan is Project <- Range with
+    # no ArrowEvalPython.  It stays as a step of the frozen warm-up.
     # (lambda form: @pandas_udf type-hint inference breaks under this
     # module's `from __future__ import annotations` — round-1 lesson)
     import pyspark.sql.functions as F
 
     _warm = F.pandas_udf(lambda s: s, "long")
     spark.range(64).repartition(32).select(_warm("id")).count()
-    # ...and the first mapInArrow query, which the pandas_udf warm-up
-    # above does not cover (measured r15: ~2.5-4 s; a re-run ~0.5 s).
+    # ...and the first mapInArrow query, which is the step that starts
+    # the Python/Arrow worker pool (measured r15: ~2.5-4 s; a re-run
+    # ~0.5 s).
     # Much of it is not a pool spawn but per task: each worker task
     # re-read pyspark.zip's directory once per zipimporter
     # (importlib.invalidate_caches), which build_session's worker
     # daemon skips for unchanged archives (session.py; measured on 4
     # cores: this step 3.4-3.6 -> 2.1 s, its re-run 1.6 -> 0.8 s).
-    # Session setup, not query cost — same contract as the pandas_udf
+    # Session setup, not query cost — same contract as the table-scan
     # warm-up.
 
     def _warm_arrow(batches):

@@ -253,16 +253,17 @@ def stream_ingest_blocks(
             .parquet(target_dir)
         )
 
-    q = (
+    from graphsense_datafeed_spark.streaming.windows import drain_stream
+
+    drain_stream(
+        spark,
         spark.readStream.schema(BLOCK_FEED_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(feed_dir)
         .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        ckpt_dir,
     )
-    q.awaitTermination()
 
 
 def batch_ingest_blocks(spark: SparkSession, feed_dir: str) -> DataFrame:
@@ -748,11 +749,11 @@ def ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     availableNow here = the bulk/full-sync run; the identical query
     with a continuous trigger is the live daemon (SURVEY §3.2-2)."""
-    import shutil
     import tempfile
     import uuid
 
     from graphsense_datafeed_spark.session import ensure_runtime_confs
+    from graphsense_datafeed_spark.streaming.windows import drain_stream
 
     ensure_runtime_confs(spark)
     # stage the feed file into a tail directory (the "arriving blocks")
@@ -775,15 +776,9 @@ def ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", uuid.uuid4().hex[:8])
-    q = (
-        normalized.writeStream.foreachBatch(land)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        spark, normalized.writeStream.foreachBatch(land).trigger(availableNow=True)
     )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(os.path.join(out_dir, "batch=*")).select(
         "height", "block_hash", "block_ts", "block_date", "no_transactions"
     )
@@ -826,6 +821,8 @@ def stream_rates_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from graphsense_datafeed_spark.streaming.windows import drain_stream
+
     run = uuid.uuid4().hex[:8]
     feed_dir = os.path.join(tempfile.gettempdir(), "gds_rates_feed", run)
     os.makedirs(feed_dir)
@@ -843,7 +840,6 @@ def stream_rates_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.utime(rev, (2_000_000, 2_000_000))
 
     target = os.path.join(tempfile.gettempdir(), "gds_rates_table", run)
-    ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", "rates_" + run)
     stream = (
         spark.readStream.schema("date DATE, usd DOUBLE, eur DOUBLE")
         .option("header", True)
@@ -863,14 +859,9 @@ def stream_rates_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        spark, stream.writeStream.foreachBatch(upsert).trigger(availableNow=True)
     )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(target).select(
         F.col("date").cast("date").alias("date"), "usd", "eur"
     )

@@ -21,7 +21,6 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 import pyspark.sql.functions as F
@@ -930,6 +929,8 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import uuid as _uuid
 
+    from graphsense_datafeed_spark.streaming.windows import drain_stream
+
     spark.dataSource.register(FeedStreamSource)
     s = (
         spark.readStream.format("gds_blockfeed_stream")
@@ -938,34 +939,27 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = "s" + _uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
     # availableNow snapshots only the FIRST page for a simple stream
     # reader (measured), so the drain is processAllAvailable: each
     # trigger advances the cursor until read() returns no new rows.
-    q = (
-        s.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+    # Then materialize the (tiny, feed-sized) result and release the
+    # uuid-named sink table (drain_stream removes the checkpoint dir)
+    # — repeated invocations in a long session must not accumulate
+    # either, failed ones included (round-5 code-review find)
     try:
-        q.processAllAvailable()
+        drain_stream(
+            spark,
+            s.writeStream.format("memory").queryName(name).outputMode("append"),
+            until_idle=True,
+        )
+        rows = spark.table(name).collect()
     finally:
-        q.stop()
-    # materialize the (tiny, feed-sized) result, then release the
-    # uuid-named sink table and the checkpoint dir — repeated
-    # invocations in a long session must not accumulate either
-    # (round-5 code-review find)
-    rows = spark.table(name).collect()
-    out = spark.createDataFrame(
+        spark.catalog.dropTempView(name)
+    return spark.createDataFrame(
         rows,
         "height bigint, block_hash string, timestamp bigint, "
         "no_transactions bigint",
     )
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 @query(

@@ -22,6 +22,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.streaming.windows import (
+    drain_stream,
     events_state_partitions,
     read_events_stream,
     run_stream_to_memory,
@@ -514,20 +515,17 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(new_ver)
             os.rename(tmp, pointer)
 
-        q = (
+        drain_stream(
+            spark,
             spark.readStream.schema(
                 "key bigint, name string, cents bigint, op string"
             )
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
             .writeStream.foreachBatch(apply_batch)
-            .option(
-                "checkpointLocation", os.path.join(base_dir, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            os.path.join(base_dir, "ckpt"),
         )
-        q.awaitTermination()
         with open(final_marker + ".tmp", "w") as fh:
             with open(pointer) as p:
                 fh.write(p.read())

@@ -24,13 +24,16 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
 import uuid
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.schemas import EVENTS_RAW, EVENTS_US
@@ -45,14 +48,22 @@ from graphsense_datafeed_spark.sources.tables import (
 
 def _events_stream_dir(sf_dir: str) -> str:
     """The file stream source needs a DIRECTORY; stage one containing a
-    symlink to the fixture file (no copy, read-only source untouched)."""
+    symlink to the fixture file (no copy, read-only source untouched).
+    The directory name carries a short hash of the absolute ``sf_dir``,
+    so two fixture roots with the same basename never share a link
+    (a shared one read the other root's file, or failed when that
+    root was gone)."""
+    root = os.path.abspath(sf_dir.rstrip("/"))
+    tag = hashlib.sha256(root.encode()).hexdigest()[:8]
     d = os.path.join(
-        tempfile.gettempdir(), "gds_stream_src", os.path.basename(sf_dir.rstrip("/"))
+        tempfile.gettempdir(), "gds_stream_src", f"{os.path.basename(root)}-{tag}"
     )
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/events.parquet", link)
+    try:
+        os.symlink(os.path.join(root, "events.parquet"), link)
+    except FileExistsError:
+        pass
     return d
 
 
@@ -115,6 +126,86 @@ def events_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     return stream_state_partitions(spark, path_for(sf_dir, "events"))
 
 
+# Spark's FileSystem-API checkpoint manager (the Spark 4.1.2 class name).
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def is_local_checkpoint(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` resolves to Hadoop's local file system: a
+    ``file:`` URI, or a path without a scheme under a ``file:``
+    ``fs.defaultFS`` (the session's value, else the context's).  Only
+    the strings are read; no file system is contacted."""
+    scheme = urlparse(path).scheme
+    if not scheme:
+        default_fs = spark.conf.get("fs.defaultFS", None) or (
+            spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        )
+        scheme = urlparse(default_fs or "file:///").scheme
+    return scheme == "file"
+
+
+def drain_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    until_idle: bool = False,
+) -> StreamingQuery:
+    """Start ``writer`` on ``checkpoint`` and wait until its query ends;
+    return the finished query.  Every stream the package runs starts
+    here.
+
+    - *Wait.* The query runs to its own end (``availableNow``), or with
+      ``until_idle`` until ``processAllAvailable`` returns, and is
+      stopped if it is still active when the wait ends or raises.
+    - *Checkpoint manager.* Without libhadoop, Hadoop's local file
+      system shells out: Spark's default FileContext manager forks a
+      ``readlink`` on every checkpoint rename (offsets, commits, the
+      file source's log, state-store deltas), about 24 per micro-batch
+      of the block daemon.  On a local checkpoint, and unless the
+      session already names a manager, the query runs on Spark's
+      FileSystem manager: on this file system both write a temporary
+      file and ``rename(2)`` it into place, and FileContext's
+      no-overwrite rename is the same existence check followed by the
+      rename, so only the forks go.  HDFS keeps FileContext, whose
+      rename is atomic there.  The setting covers the whole run — the
+      file source opens its log in the stream thread, after
+      ``start()`` — and the previous value is restored afterwards.
+    - *Temporary checkpoint.* With no ``checkpoint``, one is made under
+      ``$TMPDIR/gds_ckpt`` and deleted when the query ends, whether or
+      not it failed."""
+    temporary = checkpoint is None
+    if temporary:
+        checkpoint = os.path.join(
+            tempfile.gettempdir(), "gds_ckpt", "s" + uuid.uuid4().hex[:12]
+        )
+    scoped = (
+        spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None
+        and is_local_checkpoint(spark, checkpoint)
+    )
+    if scoped:
+        spark.conf.set(_CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
+    try:
+        q = writer.option("checkpointLocation", checkpoint).start()
+        try:
+            if until_idle:
+                q.processAllAvailable()
+            else:
+                q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
+    finally:
+        if scoped:
+            spark.conf.unset(_CHECKPOINT_MANAGER_KEY)
+        if temporary:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return q
+
+
 def run_stream_to_memory(
     spark: SparkSession,
     sdf: DataFrame,
@@ -138,28 +229,27 @@ def run_stream_to_memory(
     up front rather than inheriting the batch default.  The batch
     setting is restored afterwards — streaming queries here run to
     completion, never concurrently with a batch plan.  A ``progress``
-    list receives the drained query's ``recentProgress``."""
+    list receives the drained query's ``recentProgress``.  A failed
+    stream drops its memory table (and drain_stream its checkpoint)."""
     name = "s" + uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
+        q = drain_stream(
+            spark,
             sdf.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
-        q.awaitTermination()
-        if progress is not None:
-            progress.extend(q.recentProgress)
+    except BaseException:
+        spark.catalog.dropTempView(name)
+        raise
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    if progress is not None:
+        progress.extend(q.recentProgress)
+    return spark.table(name)
 
 
 @query(
@@ -417,16 +507,9 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
     s = read_events_stream(spark, sf_dir)
-    name = "s" + uuid.uuid4().hex[:12]
-    ckpt = os.path.join(tempfile.gettempdir(), "gds_ckpt", name)
-    q = (
-        s.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_stream(
+        spark, s.writeStream.foreachBatch(upsert_batch).trigger(availableNow=True)
     )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(os.path.join(out_dir, "batch=*"))
 
 

@@ -791,6 +791,42 @@ def test_shared_graph_frames_built_once():
     over = {k: n for k, n in counts.items() if n > limits[k]}
     assert not over, over
 
+
+def test_streams_start_only_in_drain_stream():
+    """Every stream the package runs is started by
+    streaming.windows.drain_stream, which scopes the checkpoint manager
+    and removes a temporary checkpoint.  A ``.start(``/``.toTable(``
+    call in any module that builds a ``writeStream``, outside that
+    helper, fails here."""
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "graphsense_datafeed_spark")
+    helper_calls, stray = 0, []
+    for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        src = open(p).read()
+        if "writeStream" not in src:
+            continue
+        tree = ast.parse(src)
+        inside = set()
+        if p.endswith(os.path.join("streaming", "windows.py")):
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "drain_stream":
+                    inside = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("start", "toTable")
+            ):
+                if id(node) in inside:
+                    helper_calls += 1
+                else:
+                    stray.append(f"{os.path.relpath(p, pkg)}:{node.lineno}")
+    assert helper_calls == 1 and not stray, stray
+
+
 def test_oracles_follow_the_checkout(tmp_path):
     """Every file path in the oracle SQL comes from the path constants
     (sources/scans.py), so an oracle reads the fixtures of the checkout

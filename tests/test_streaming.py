@@ -1171,3 +1171,177 @@ def test_events_state_partitions_stay_with_their_stream(
         spark.streams.removeListener(listener)
     assert sorted((r["g"], r["n"]) for r in rows) == [(0, 10), (1, 10), (2, 10)]
     assert sorted(seen.values(), key=min) == [{w._STREAM_STATE_PARTITIONS}, {13}]
+
+
+def _ckpt_dirs():
+    d = os.path.join(tempfile.gettempdir(), "gds_ckpt")
+    return set(os.listdir(d)) if os.path.isdir(d) else set()
+
+
+def _file_manager(q):
+    """The class name of the checkpoint manager the query's offset log
+    wrote through."""
+    fm = q._jsq.streamingQuery().offsetLog().fileManager()
+    return fm.getClass().getName()
+
+
+def _rows_frame(spark, tmp_path, n=6):
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(i,) for i in range(n)], "k bigint").write.parquet(src)
+    return spark.readStream.schema("k bigint").parquet(src)
+
+
+def test_failed_stream_leaves_no_checkpoint(spark, sf_dir, monkeypatch):
+    """A foreachBatch that raises on batch 0 propagates its error and
+    leaves no temporary checkpoint behind."""
+    import graphsense_datafeed_spark.streaming.windows as w
+
+    bad = spark.readStream.schema("x bigint").parquet(
+        w._events_stream_dir(sf_dir)
+    )  # the batch has no event_id: the sink's select raises on batch 0
+    monkeypatch.setattr(w, "read_events_stream", lambda spark, sf_dir: bad)
+    before = _ckpt_dirs()
+    with pytest.raises(Exception, match="event_id"):
+        w.stream_foreachbatch(spark, sf_dir)
+    assert _ckpt_dirs() - before == set()
+
+
+def test_failed_memory_stream_drops_its_table(spark, tmp_path):
+    """run_stream_to_memory's failure path: the error propagates and
+    neither the memory table nor the checkpoint stays behind."""
+    before_ckpt = _ckpt_dirs()
+    before_views = {t.name for t in spark.catalog.listTables()}
+    boom = _rows_frame(spark, tmp_path).select(F.raise_error(F.lit("boom")))
+    with pytest.raises(Exception, match="boom"):
+        run_stream_to_memory(spark, boom, "append")
+    assert {t.name for t in spark.catalog.listTables()} == before_views
+    assert _ckpt_dirs() - before_ckpt == set()
+
+
+def test_local_checkpoint_drains_on_filesystem_manager(spark, tmp_path):
+    """A stream on a local checkpoint runs on Spark's FileSystem
+    checkpoint manager, and the session conf is as before afterwards."""
+    from graphsense_datafeed_spark.streaming.windows import (
+        FS_CHECKPOINT_MANAGER,
+        _CHECKPOINT_MANAGER_KEY,
+        drain_stream,
+    )
+
+    s = _rows_frame(spark, tmp_path)
+    seen = []
+    q = drain_stream(
+        spark,
+        s.writeStream.foreachBatch(lambda df, i: seen.append(df.count()))
+        .trigger(availableNow=True),
+        str(tmp_path / "ckpt"),
+    )
+    assert sum(seen) == 6
+    assert _file_manager(q) == FS_CHECKPOINT_MANAGER
+    assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None
+    assert os.path.isdir(tmp_path / "ckpt" / "commits")  # caller-owned: kept
+
+
+def test_drain_restores_conf_when_the_stream_raises(spark, tmp_path):
+    from graphsense_datafeed_spark.streaming.windows import (
+        _CHECKPOINT_MANAGER_KEY,
+        drain_stream,
+    )
+
+    def fail(df, batch_id):
+        raise RuntimeError("batch fails")
+
+    before = _ckpt_dirs()
+    with pytest.raises(Exception, match="batch fails"):
+        drain_stream(
+            spark,
+            _rows_frame(spark, tmp_path).writeStream.foreachBatch(fail)
+            .trigger(availableNow=True),
+        )
+    assert spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None
+    assert _ckpt_dirs() - before == set()
+
+
+def test_drain_keeps_a_callers_checkpoint_manager(spark, tmp_path):
+    from graphsense_datafeed_spark.streaming.windows import (
+        _CHECKPOINT_MANAGER_KEY,
+        drain_stream,
+    )
+
+    mine = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    spark.conf.set(_CHECKPOINT_MANAGER_KEY, mine)
+    try:
+        q = drain_stream(
+            spark,
+            _rows_frame(spark, tmp_path).writeStream.format("noop")
+            .trigger(availableNow=True),
+        )
+        assert _file_manager(q) == mine
+        assert spark.conf.get(_CHECKPOINT_MANAGER_KEY) == mine
+    finally:
+        spark.conf.unset(_CHECKPOINT_MANAGER_KEY)
+
+
+def test_hdfs_checkpoint_is_not_local(spark):
+    """Locality is judged from the path and fs.defaultFS alone, so an
+    HDFS checkpoint keeps FileContext without any HDFS contact."""
+    from graphsense_datafeed_spark.streaming.windows import is_local_checkpoint
+
+    assert not is_local_checkpoint(spark, "hdfs://namenode:8020/ckpt/q1")
+    assert is_local_checkpoint(spark, "file:/tmp/ckpt/q1")
+    assert is_local_checkpoint(spark, "/tmp/ckpt/q1")
+    spark.conf.set("fs.defaultFS", "hdfs://namenode:8020")
+    try:
+        assert not is_local_checkpoint(spark, "/tmp/ckpt/q1")
+    finally:
+        spark.conf.unset("fs.defaultFS")
+
+
+def test_reorg_daemon_resumes_across_checkpoint_managers(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint begun on Spark's default manager (the key unset)
+    resumes on the FileSystem manager exactly once: the drained table
+    equals the batch ingest of the whole feed."""
+    import graphsense_datafeed_spark.streaming.windows as w
+    from graphsense_datafeed_spark.ingest.facade import (
+        batch_ingest_blocks,
+        stream_ingest_blocks,
+    )
+
+    feed = str(tmp_path / "feed")
+    target = str(tmp_path / "block_table")
+    ckpt = str(tmp_path / "ckpt")
+    _stage_reorg_feed(feed, upto_file=2)
+    monkeypatch.setattr(w, "is_local_checkpoint", lambda spark, path: False)
+    stream_ingest_blocks(spark, feed, target, ckpt)
+    monkeypatch.undo()
+    assert len(_block_table_rows(spark, target)) == 80
+
+    _stage_reorg_feed(feed, upto_file=4)
+    stream_ingest_blocks(spark, feed, target, ckpt)
+    want = sorted(
+        (r["height"], r["block_hash"], r["ingest_seq"])
+        for r in batch_ingest_blocks(spark, feed).collect()
+    )
+    assert _block_table_rows(spark, target) == want
+    commits = [n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()]
+    assert sorted(commits) == ["0", "1", "2", "3"]
+
+
+def test_events_stream_dirs_of_same_named_roots_stay_apart(tmp_path, monkeypatch):
+    """Two fixture roots with the same basename stage separate stream
+    directories, each linking its own events file."""
+    from graphsense_datafeed_spark.streaming.windows import _events_stream_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    roots = [tmp_path / side / "sf0.01" for side in ("a", "b")]
+    for r in roots:
+        r.mkdir(parents=True)
+        (r / "events.parquet").write_text(str(r))
+    dirs = [_events_stream_dir(str(r)) for r in roots]
+    assert dirs[0] != dirs[1]
+    for r, d in zip(roots, dirs):
+        assert open(os.path.join(d, "events.parquet")).read() == str(r)
