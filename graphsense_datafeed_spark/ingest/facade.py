@@ -29,6 +29,7 @@ from dataclasses import replace
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.scans import (
@@ -3589,19 +3590,7 @@ def graph_pagerank_personalized(
     Scale: graph_pagerank's loop (pagerank_iterate) with the seed
     predicate as its teleport set; the integer fixpoint early-exit
     argument carries over verbatim."""
-    is_seed = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ppr:"), F.col("addr")).cast("binary")),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 16
-        == 0
-    )
+    is_seed = md5_int(F.lit("ppr:"), F.col("addr"), digits=4) % 16 == 0
     ranks = pagerank_iterate(flow_edges(spark), max_iter=10, teleport=is_seed)
     return ranks.state.filter(F.col("rank_e12") > 0)
 
@@ -3962,23 +3951,7 @@ def ingest_taint_haircut(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("i.address")[0].alias("addr"),
         F.col("i.value").cast("bigint").alias("v"),
     )
-    seeded = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("taint:"), F.col("addr")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 50
-        == 0
-    )
+    seeded = md5_int(F.lit("taint:"), F.col("addr"), digits=4) % 50 == 0
     tx_taint = ins.groupBy("tx_hash").agg(
         F.sum("v").cast("bigint").alias("total_in"),
         F.sum(F.when(seeded, F.col("v")).otherwise(0))

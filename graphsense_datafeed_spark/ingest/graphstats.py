@@ -37,6 +37,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.ingest.facade import _DUCK_BLOCKS, cooccurrence_edges
 from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
@@ -2666,18 +2667,7 @@ def graph_label_homophily(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = e.select(F.col("src").alias("addr")).union(
         e.select(F.col("dst").alias("addr"))
     ).distinct()
-    lbl = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hom:"), F.col("addr")).cast("binary")),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    lbl = md5_int(F.lit("hom:"), F.col("addr"), digits=4) % 2
     lab = nodes.select("addr", lbl.alias("lbl"))
     la = lab.select(F.col("addr").alias("a_src"), F.col("lbl").alias("la"))
     lb = lab.select(F.col("addr").alias("a_dst"), F.col("lbl").alias("lb"))

@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -2165,21 +2166,12 @@ def agg_bootstrap_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", F.explode(F.sequence(F.lit(1), F.lit(50)))
     ).withColumn(
         "u",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("event_id").cast("string"),
-                        F.lit("_"),
-                        F.col("b").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.col("event_id").cast("string"),
+            F.lit("_"),
+            F.col("b").cast("string"),
+            digits=7,
+        )
         / 268435456.0,
     )
     w = (
@@ -2987,22 +2979,7 @@ def agg_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed rollup (the randomization-unit shuffle the
     experiment already needs), then a 2-row arm aggregate."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("exp42_"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("exp42_"), F.col("user_id").cast("string"), digits=7) % 2
     per_user = ev.groupBy("user_id", arm.alias("arm")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
         .cast("bigint")
@@ -3215,16 +3192,7 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket) partials merge map-side, then |groups|×9 rows rank
     locally.  Mergeable, incremental."""
     ev = load(spark, sf_dir, "events")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("event_id").cast("string").cast("binary")), 1, 7
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 9
-    )
+    bucket = md5_int(F.col("event_id").cast("string"), digits=7) % 9
     v = F.floor(F.col("value") * 10000).cast("bigint")
     bucket_means = (
         ev.select("event_type", bucket.alias("bucket"), v.alias("v"))
@@ -4921,21 +4889,12 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b",
         "v_e4",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("event_id").cast("string"),
-                            F.lit(":"),
-                            F.col("b").cast("string"),
-                        ).cast("binary")
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(
+                F.col("event_id").cast("string"),
+                F.lit(":"),
+                F.col("b").cast("string"),
+                digits=4,
+            )
             % 2
         ).alias("arm"),
     )
@@ -10694,19 +10653,7 @@ def agg_kmv_sketch_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     associatively, exactly how you maintain NDV across 100 TB
     partitions without re-scanning."""
     ev = load(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("kmv:"), F.col("user_id").cast("string")
-                ).cast("binary")
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_int(F.lit("kmv:"), F.col("user_id").cast("string"), digits=15)
     per_type = ev.select(
         F.col("event_type").alias("grp"), h.alias("h")
     ).distinct()
@@ -11403,22 +11350,7 @@ def agg_meta_fixed_effect_i2(
     Scale: one events pass to ≤4 cells, 1-row anchor, 1-row
     finish."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("arm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("arm:"), F.col("user_id").cast("string"), digits=4) % 2
     hi = F.col("value") >= 100.0
     base = ev.select(
         arm.alias("arm"),

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -738,20 +739,7 @@ def events_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("exp42_"),
-                                F.col("user_id").cast("string"),
-                            ).cast("binary")
-                        ),
-                        1,
-                        7,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
+                md5_int(F.lit("exp42_"), F.col("user_id").cast("string"), digits=7)
                 % 2
             ).alias("arm")
         )
@@ -861,22 +849,7 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = F.date_add(
         F.col("d0"), (F.datediff("d1", "d0") / 2).cast("int")
     )
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("exp42_"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("exp42_"), F.col("user_id").cast("string"), digits=7) % 2
     per_user = j.groupBy("user_id").agg(
         F.max(arm).alias("arm"),
         F.sum(
@@ -1049,22 +1022,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_alloc"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("neyman_"), F.col("c_custkey").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000000
-    )
+    u = md5_int(F.lit("neyman_"), F.col("c_custkey").cast("string"), digits=7) % 1000000
     j = c.join(F.broadcast(alloc), "c_mktsegment")
     sampled = F.count_if(
         u < F.col("n_alloc").cast("double") / F.col("n_h") * 1000000
@@ -1200,16 +1158,7 @@ def split_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB swap the ordinal for a (fold, file) composite emitted
     at write time, documented here)."""
     docs = load(spark, sf_dir, "documents")
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 7
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 5
-    )
+    fold = md5_int(F.col("doc_id").cast("string"), digits=7) % 5
     assigned = docs.select("doc_id", fold.alias("fold"))
     w = Window.partitionBy("fold").orderBy("doc_id")
     return assigned.select(
@@ -1666,18 +1615,7 @@ def split_grouped_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = ev.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_events")
     ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.col("user_id").cast("string").cast("binary")),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 5
-        ).alias("fold"),
+        (md5_int(F.col("user_id").cast("string"), digits=4) % 5).alias("fold"),
         "n_events",
     )
     tot = assigned.agg(F.sum("n_events").cast("bigint").alias("total"))
@@ -1752,17 +1690,7 @@ def anon_dp_laplace_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("true_n")
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("dp:"), F.col("event_type")).cast("binary")
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(F.lit("dp:"), F.col("event_type"), digits=13)
         + 1.0
     ) / 4503599627370497.0
     centered = u - 0.5
@@ -1958,20 +1886,7 @@ def events_switchback_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     hcol = F.date_trunc("hour", F.col("ts"))
     arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("sb:"),
-                        F.date_format(hcol, "yyyy-MM-dd HH:mm:ss"),
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(F.lit("sb:"), F.date_format(hcol, "yyyy-MM-dd HH:mm:ss"), digits=4)
         % 2
     )
     buckets = ev.groupBy(hcol.alias("h")).agg(
@@ -1980,20 +1895,9 @@ def events_switchback_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y_e4")
     ).select(
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("sb:"),
-                            F.date_format(F.col("h"), "yyyy-MM-dd HH:mm:ss"),
-                        ).cast("binary")
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int(
+                F.lit("sb:"), F.date_format(F.col("h"), "yyyy-MM-dd HH:mm:ss"), digits=4
+            )
             % 2
         ).alias("arm"),
         "y_e4",
@@ -2116,22 +2020,7 @@ def events_sequential_probe_obf(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (look, arm) partials; 1-row-per-look finish. The streaming
     form updates the same six sums per look key."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("arm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("arm:"), F.col("user_id").cast("string"), digits=4) % 2
     assigned = ev.select(
         F.floor(F.col("value") * 10000).cast("bigint").alias("v_e4"),
         arm.alias("arm"),
@@ -2245,22 +2134,7 @@ def agg_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile (bounded per group), broadcast join-back — the
     agg_levene shape with a guarantee on top."""
     ev = load(spark, sf_dir, "events")
-    split = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("cf:"), F.col("event_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 4
-    )
+    split = md5_int(F.lit("cf:"), F.col("event_id").cast("string"), digits=4) % 4
     labeled = ev.select(
         "event_type",
         F.floor(F.col("value") * 10000).cast("bigint").alias("v_e4"),
@@ -2401,22 +2275,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row finish on the driver-side-free conditional-max pivot; the
     same six-sums-per-cell state streams (events_ab_cuped note)."""
     ev = load(spark, sf_dir, "events")
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("did:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    treat = md5_int(F.lit("did:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.select(
         F.floor(F.col("value") * 10000).cast("bigint").alias("v_e4"),
         treat.alias("treat"),
@@ -2734,22 +2593,13 @@ def profile_ndv_sample_gee(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the referee."""
     li = load(spark, sf_dir, "lineitem")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ndv:"),
-                        F.col("l_orderkey").cast("string"),
-                        F.lit(":"),
-                        F.col("l_linenumber").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.lit("ndv:"),
+            F.col("l_orderkey").cast("string"),
+            F.lit(":"),
+            F.col("l_linenumber").cast("string"),
+            digits=6,
+        )
         % 100
     )
     rows_t = li.select(
@@ -2874,19 +2724,9 @@ def anon_randomized_response_freq(
         )
     )
     k_row = types.agg(F.max("k").alias("k"))
-    coin = lambda salt: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("event_id").cast("string"), F.lit(salt)
-                ).cast("binary")
-            ),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    coin = lambda salt: md5_int(  # noqa: E731
+        F.col("event_id").cast("string"), F.lit(salt), digits=4
+    )
     coined = ev.crossJoin(F.broadcast(k_row)).select(
         F.col("event_type").alias("true_type"),
         (coin(":rr") % 4).alias("keep"),
@@ -3702,22 +3542,7 @@ def events_covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate — the covariate list extends
     without new passes."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("exp42_"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("exp42_"), F.col("user_id").cast("string"), digits=7) % 2
     base = ev.select(
         arm.alias("arm"),
         F.floor(F.col("value") * 10000).cast("bigint").alias("v_value"),
@@ -3855,22 +3680,7 @@ def events_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one keyed user aggregate → 2-arm partial aggregate →
     1-row conditional-max pivot — the events_did_estimator shape."""
     ev = load(spark, sf_dir, "events")
-    z = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("iv:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    z = md5_int(F.lit("iv:"), F.col("user_id").cast("string"), digits=4) % 2
     users = ev.groupBy("user_id").agg(
         F.max(z).cast("bigint").alias("z"),
         # exact int64 DIV matching the oracle's `//` (ADVICE r11):
@@ -4026,19 +3836,7 @@ def events_rdd_sharp(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate → 1-row pivot; no windows."""
     ev = load(spark, sf_dir, "events")
     score = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("rdd:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(F.lit("rdd:"), F.col("user_id").cast("string"), digits=4)
         % 1000
         - 500
     )
@@ -4275,22 +4073,7 @@ def events_parallel_trends_placebo(
     Scale: one filtered pass → 4-cell partial aggregate → 1-row
     pivot — the events_did_estimator shape exactly."""
     ev = load(spark, sf_dir, "events")
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("did:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    treat = md5_int(F.lit("did:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.filter(F.dayofmonth("ts") <= 15).select(
         F.floor(F.col("value") * 10000).cast("bigint").alias("v_e4"),
         treat.alias("treat"),
@@ -4480,11 +4263,7 @@ def sample_systematic_interval(
     seq_global_two_pass shape this op composes with."""
     orders = load(spark, sf_dir, "orders")
     w = Window.orderBy("o_orderkey")
-    phase = (
-        F.conv(F.substring(F.md5(F.lit("sys:seed").cast("binary")), 1, 4), 16, 10)
-        .cast("bigint")
-        % 10
-    )
+    phase = md5_int(F.lit("sys:seed"), digits=4) % 10
     ranked = orders.select(
         "o_orderkey",
         "o_custkey",
@@ -4553,22 +4332,7 @@ def events_quantile_treatment_effect(
     Scale: one pass → per-arm disc-quantile aggregate (the
     agg_quantiles_grouped shape); 9-row finish."""
     ev = load(spark, sf_dir, "events")
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("did:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    treat = md5_int(F.lit("did:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.select(
         F.floor(F.col("value") * 10000).cast("bigint").alias("v"),
         treat.alias("treat"),
@@ -4763,22 +4527,7 @@ def events_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-keyed self-join of the tiny cell table → calendar-bounded
     finish."""
     ev = load(spark, sf_dir, "events")
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("did:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    treat = md5_int(F.lit("did:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.select(
         F.dayofmonth("ts").cast("bigint").alias("d"),
         F.floor(F.col("value") * 10000).cast("bigint").alias("v"),
@@ -4872,22 +4621,7 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed reduction to a 1-row readout — nothing
     else; runs before any outcome scan needs to."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("srm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("srm:"), F.col("user_id").cast("string"), digits=4) % 2
     users = ev.groupBy("user_id").agg(F.max(arm).alias("arm"))
     arms = users.agg(
         F.count_if(F.col("arm") == 0).cast("bigint").alias("n0"),
@@ -4988,22 +4722,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed reduction, a 1-row moment table, a 1-row
     readout — the whole adjustment is free at any corpus size."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("srm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("srm:"), F.col("user_id").cast("string"), digits=4) % 2
     v = F.floor(F.col("value") * 10000).cast("bigint")
     users = ev.groupBy("user_id").agg(
         F.max(arm).alias("arm"),
@@ -5297,19 +5016,7 @@ def anon_synthetic_marginals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tw_row))
         .select(
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("synth:"), F.col("id").cast("string")
-                            ).cast("binary")
-                        ),
-                        1,
-                        7,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
+                md5_int(F.lit("synth:"), F.col("id").cast("string"), digits=7)
                 % F.col("tw_v")
             ).alias("u")
         )

@@ -28,6 +28,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import hex_int, md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load, register_views
 
@@ -1001,8 +1002,8 @@ def geo_grid_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(F.col("c_custkey").cast("string").cast("binary"))
     pts = c.select(
         F.col("c_custkey").alias("id"),
-        (F.conv(F.substring(h, 1, 7), 16, 10).cast("bigint") % 10000).alias("x"),
-        (F.conv(F.substring(h, 8, 7), 16, 10).cast("bigint") % 10000).alias("y"),
+        (hex_int(h, 1, 7) % 10000).alias("x"),
+        (hex_int(h, 8, 7) % 10000).alias("y"),
     )
     lhs = (
         pts.withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
@@ -1611,16 +1612,8 @@ def join_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bounded 9× replication + cell equi-join + keyed top-k;
     no BNLJ, no cartesian."""
     c = load(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 300)
-    hx = F.conv(
-        F.substring(F.md5(F.col("c_custkey").cast("string").cast("binary")), 1, 7),
-        16,
-        10,
-    ).cast("bigint") % 10000
-    hy = F.conv(
-        F.substring(F.md5(F.col("c_custkey").cast("string").cast("binary")), 8, 7),
-        16,
-        10,
-    ).cast("bigint") % 10000
+    hx = md5_int(F.col("c_custkey").cast("string"), digits=7) % 10000
+    hy = md5_int(F.col("c_custkey").cast("string"), start=8, digits=7) % 10000
     pts = c.select(
         F.col("c_custkey").alias("id"), hx.alias("x"), hy.alias("y")
     )
@@ -1720,19 +1713,9 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     unblocked fuzzy join is quadratic and never acceptable at
     100 TB."""
     cust = load(spark, sf_dir, "customer")
-    h = lambda n, ln: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("fz:"), F.col("c_custkey").cast("string")
-                ).cast("binary")
-            ),
-            n,
-            ln,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = lambda n, ln: md5_int(  # noqa: E731
+        F.lit("fz:"), F.col("c_custkey").cast("string"), start=n, digits=ln
+    )
     digit = (h(3, 1) % 10).cast("string")
     dirty_name = F.when(
         h(1, 2) % 2 == 0,
@@ -2277,12 +2260,8 @@ def geo_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     h = F.md5(F.col("c_custkey").cast("string").cast("binary"))
     pts = c.select(
-        (F.conv(F.substring(h, 1, 7), 16, 10).cast("bigint") % 10000).alias(
-            "x"
-        ),
-        (F.conv(F.substring(h, 8, 7), 16, 10).cast("bigint") % 10000).alias(
-            "y"
-        ),
+        (hex_int(h, 1, 7) % 10000).alias("x"),
+        (hex_int(h, 8, 7) % 10000).alias("y"),
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
     )
     cells = pts.groupBy(

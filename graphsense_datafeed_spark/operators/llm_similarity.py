@@ -24,6 +24,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.schemas import EMBEDDING_DIM
 from graphsense_datafeed_spark.sources.tables import load
@@ -1680,21 +1681,9 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ms = F.explode(F.sequence(F.lit(0), F.lit(_RP_OUT_DIM - 1))).alias("m")
     sign_even = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("m").cast("string"),
-                        F.lit("_"),
-                        F.col("pos").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(
+            F.col("m").cast("string"), F.lit("_"), F.col("pos").cast("string"), digits=7
+        )
         % 2
         == 0
     )
@@ -2667,23 +2656,7 @@ def embed_alignment_uniformity(
     the distance join is keyed on the dimension index, map-side
     combinable per pair."""
     emb = load(spark, sf_dir, "embeddings")
-    keep = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("au:"), F.col("vec_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-        < 20
-    )
+    keep = md5_int(F.lit("au:"), F.col("vec_id").cast("string"), digits=6) % 100 < 20
     samp = emb.filter(keep).select("vec_id", "label", "embedding")
     n_sampled = samp.count()
     q = samp.select(

@@ -14,8 +14,9 @@ op (top-k terms) uses per-group WindowGroupLimit, not a global sort.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -836,14 +837,7 @@ def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     retuned without rehashing; the split boundary at 50/1000 = 5%.
     tests/test_llm.py pins stability-under-subset and the holdout
     fraction's concentration."""
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 7),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), digits=7) % 1000
     return load(spark, sf_dir, "documents").select(
         "doc_id",
         bucket.alias("bucket"),
@@ -1083,15 +1077,9 @@ def sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-prefix-uniform trick as sample_deterministic, one rank per
     group instead of a global percentage."""
     ev = load(spark, sf_dir, "events")
-    tag = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("event_type"), F.lit(":"), F.col("event_id").cast("string")).cast("binary")),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    tag = md5_int(
+        F.col("event_type"), F.lit(":"), F.col("event_id").cast("string"), digits=15
+    )
     w = Window.partitionBy("event_type").orderBy(tag, F.col("event_id"))
     return (
         ev.withColumn("rnk", F.row_number().over(w).cast("bigint"))
@@ -1135,14 +1123,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rate-per-source) and split_train_holdout (unweighted hash
     split)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 7),
-            16,
-            10,
-        ).cast("bigint")
-        + 1.0
-    ) / 268435456.0
+    u = (md5_int(F.col("doc_id").cast("string"), digits=7) + 1.0) / 268435456.0
     key = -F.log(u) / F.col("n_chars").cast("double")
     w = Window.partitionBy("lang").orderBy(key, F.col("doc_id"))
     return (
@@ -2120,11 +2101,7 @@ def text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("token").cast("binary")), 1, 7), 16, 10)
-        .cast("bigint")
-        % 1024
-    )
+    bucket = md5_int(F.col("token"), digits=7) % 1024
     hashed = toks.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -2501,16 +2478,7 @@ def sample_upsample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole reason hash-based mixing beats sort/sample pipelines at
     100 TB.  Plan-pinned: zero exchanges."""
     docs = load(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 7
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(268435456.0)
-    )
+    u = md5_int(F.col("doc_id").cast("string"), digits=7) / F.lit(268435456.0)
     n_copies = (
         F.substring("source", 4, 8).cast("bigint") % 3
         + F.when(u < 0.5, F.lit(1)).otherwise(F.lit(0))
@@ -2658,6 +2626,44 @@ def text_lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The linear quality model the text_model_* queries score documents
+# with. _quality_logit() builds it in Spark; _LOGIT_SQL is the oracles'
+# spelling, and _S_E6_SQL / _SCORED_SQL its floored e6 probability.
+def _quality_logit() -> Column:
+    f_len = F.col("n_chars").cast("double") / 1000
+    f_words = (
+        (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))))
+        .cast("double")
+        / 100
+    )
+    f_the = (
+        (
+            F.length("text")
+            - F.length(F.replace(F.col("text"), F.lit("the")))
+        ).cast("double")
+        / (3 * F.greatest(F.col("n_chars").cast("double"), F.lit(1.0)))
+        * 10
+    )
+    return -0.25 + 1.5 * f_len - 0.75 * f_words + 2.0 * f_the
+
+
+_LOGIT_SQL = """-0.25
+                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
+                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
+                             AS DOUBLE) / 100)
+                   + 2.0 * (CAST(length(text)
+                                 - length(replace(text, 'the', ''))
+                            AS DOUBLE)
+                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
+                            * 10)"""
+_S_E6_SQL = f"CAST(FLOOR(1000000.0 / (1.0 + exp(-({_LOGIT_SQL})))) AS BIGINT) AS s_e6"
+_SCORED_SQL = f"""
+        SELECT {_S_E6_SQL},
+               CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
+        FROM documents
+"""
+
+
 @query(
     "text_score_linear_model",
     """
@@ -2706,21 +2712,7 @@ def text_score_linear_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events_error_budget_burn's baseline shape), nothing else
     changes."""
     d = load(spark, sf_dir, "documents")
-    f_len = F.col("n_chars").cast("double") / 1000
-    f_words = (
-        (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))))
-        .cast("double")
-        / 100
-    )
-    f_the = (
-        (
-            F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit("the")))
-        ).cast("double")
-        / (3 * F.greatest(F.col("n_chars").cast("double"), F.lit(1.0)))
-        * 10
-    )
-    logit = -0.25 + 1.5 * f_len - 0.75 * f_words + 2.0 * f_the
+    logit = _quality_logit()
     prob = 1.0 / (1.0 + F.exp(-logit))
     return d.select(
         "doc_id",
@@ -2867,17 +2859,10 @@ def text_vocab_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_model_calibration_ece",
-    """
+    f"""
     WITH scored AS (
         SELECT doc_id,
-               1.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text) - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10)))) AS prob,
+               1.0 / (1.0 + exp(-({_LOGIT_SQL}))) AS prob,
                CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
         FROM documents
     ), binned AS (
@@ -2915,21 +2900,7 @@ def text_model_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map + a 10-row aggregate; recalibration (Platt /
     isotonic) consumes exactly this table."""
     d = load(spark, sf_dir, "documents")
-    f_len = F.col("n_chars").cast("double") / 1000
-    f_words = (
-        (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))))
-        .cast("double")
-        / 100
-    )
-    f_the = (
-        (
-            F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit("the")))
-        ).cast("double")
-        / (3 * F.greatest(F.col("n_chars").cast("double"), F.lit(1.0)))
-        * 10
-    )
-    prob = 1.0 / (1.0 + F.exp(-(-0.25 + 1.5 * f_len - 0.75 * f_words + 2.0 * f_the)))
+    prob = 1.0 / (1.0 + F.exp(-_quality_logit()))
     label = F.when(F.col("n_chars") >= 200, 1).otherwise(0)
     binned = d.select(
         F.least(F.floor(prob * 10).cast("bigint"), F.lit(9).cast("bigint")).alias("bin"),
@@ -2953,18 +2924,9 @@ def text_model_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_model_auc",
-    """
+    f"""
     WITH scored AS (
-        SELECT doc_id,
-               CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
+        SELECT doc_id, {_S_E6_SQL},
                CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
         FROM documents
     ), ranked AS (
@@ -3046,23 +3008,7 @@ def _auc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(s_e6, label) per document — shared by the registered
     histogram-AUC plan and the rank-form referee."""
     d = load(spark, sf_dir, "documents")
-    f_len = F.col("n_chars").cast("double") / 1000
-    f_words = (
-        (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))))
-        .cast("double")
-        / 100
-    )
-    f_the = (
-        (
-            F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit("the")))
-        ).cast("double")
-        / (3 * F.greatest(F.col("n_chars").cast("double"), F.lit(1.0)))
-        * 10
-    )
-    prob = 1000000.0 / (
-        1.0 + F.exp(-(-0.25 + 1.5 * f_len - 0.75 * f_words + 2.0 * f_the))
-    )
+    prob = 1000000.0 / (1.0 + F.exp(-_quality_logit()))
     return d.select(
         F.floor(prob).cast("bigint").alias("s_e6"),
         F.when(F.col("n_chars") >= 200, 1).otherwise(0).alias("label"),
@@ -4117,14 +4063,7 @@ def text_rater_agreement_fleiss(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-value global aggregate — map-side combinable, no shuffle beyond
     the 1-row finish."""
     docs = load(spark, sf_dir, "documents")
-    jitter = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2),
-            16,
-            10,
-        ).cast("bigint")
-        - 128
-    )
+    jitter = md5_int(F.col("doc_id").cast("string"), digits=2) - 128
     n_tok = F.size(F.split("text", " "))
 
     def tercile(x, lo, hi):
@@ -4454,23 +4393,7 @@ def text_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = toks.select(
         "doc_id", "w", F.lead("w").over(w_seq).alias("nxt")
     ).filter(F.col("nxt").isNotNull())
-    green = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("w"), F.lit("|"), F.col("nxt")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0
-    )
+    green = md5_int(F.col("w"), F.lit("|"), F.col("nxt"), digits=4) % 2 == 0
     scored = pairs.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.count_if(green).cast("bigint").alias("n_green"),
@@ -4551,16 +4474,7 @@ def corpus_contamination_matrix(
     docs = load(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 7
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), digits=7) % 1000
     assigned = docs.select(
         F.when(bucket < 800, "train")
         .when(bucket < 900, "val")
@@ -4768,18 +4682,9 @@ def text_char_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_youden_j_threshold",
-    """
+    f"""
     WITH scored AS (
-        SELECT doc_id,
-               CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
+        SELECT doc_id, {_S_E6_SQL},
                CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
         FROM documents
     ), per_s AS (
@@ -4903,18 +4808,9 @@ def agg_youden_j_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_model_average_precision",
-    """
+    f"""
     WITH scored AS (
-        SELECT doc_id,
-               CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
+        SELECT doc_id, {_S_E6_SQL},
                CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
         FROM documents
     ), buckets AS (
@@ -5001,18 +4897,9 @@ def text_model_average_precision(
 
 @query(
     "text_model_brier",
-    """
+    f"""
     WITH scored AS (
-        SELECT doc_id,
-               CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
+        SELECT doc_id, {_S_E6_SQL},
                CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
         FROM documents
     ), dev AS (
@@ -5174,18 +5061,9 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_model_mcc",
-    """
+    f"""
     WITH scored AS (
-        SELECT doc_id,
-               CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
+        SELECT doc_id, {_S_E6_SQL},
                CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
         FROM documents
     ), cm AS (
@@ -5574,16 +5452,7 @@ def text_lm_holdout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.split("text", " ").alias("t"))
         .filter(F.size("t") >= 2)
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 7
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    bucket = md5_int(F.col("doc_id").cast("string"), digits=7) % 1000
     split = docs.withColumn(
         "split", F.when(bucket < 50, "holdout").otherwise("train")
     )
@@ -6729,16 +6598,7 @@ def text_rater_agreement_krippendorff(
     fold) — map-side combinable, 1-row finish; no shuffle beyond the
     final readout."""
     docs = load(spark, sf_dir, "documents")
-    jitter = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        - 128
-    )
+    jitter = md5_int(F.col("doc_id").cast("string"), digits=2) - 128
     n_tok = F.size(F.split("text", " "))
 
     def tercile(x, lo, hi):
@@ -6794,19 +6654,8 @@ def text_rater_agreement_krippendorff(
 
 @query(
     "text_model_brier_decomposition",
-    """
-    WITH scored AS (
-        SELECT CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
-               CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
-        FROM documents
+    f"""
+    WITH scored AS ({_SCORED_SQL}
     ), cells AS (
         SELECT s_e6 // 100000 AS bin,
                CAST(COUNT(*) AS BIGINT) AS n_k,
@@ -6940,19 +6789,8 @@ def text_model_brier_decomposition(
 
 @query(
     "text_model_youden_cutpoint",
-    """
-    WITH scored AS (
-        SELECT CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
-               CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
-        FROM documents
+    f"""
+    WITH scored AS ({_SCORED_SQL}
     ), atoms AS (
         SELECT s_e6,
                CAST(SUM(label) AS BIGINT) AS n_pos,
@@ -7204,19 +7042,8 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_model_auc_delong_se",
-    """
-    WITH scored AS (
-        SELECT CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
-               CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
-        FROM documents
+    f"""
+    WITH scored AS ({_SCORED_SQL}
     ), atoms AS (
         SELECT s_e6,
                CAST(SUM(label) AS BIGINT) AS p_cnt,
@@ -7339,20 +7166,6 @@ def text_model_auc_delong_se(
         .alias("delong_se_e9"),
     )
 
-
-_SCORED_SQL = """
-        SELECT CAST(FLOOR(1000000.0 / (1.0 + exp(-(-0.25
-                   + 1.5 * (CAST(n_chars AS DOUBLE) / 1000)
-                   - 0.75 * (CAST(length(text) - length(replace(text, ' ', ''))
-                             AS DOUBLE) / 100)
-                   + 2.0 * (CAST(length(text)
-                                 - length(replace(text, 'the', ''))
-                            AS DOUBLE)
-                            / (3 * GREATEST(CAST(n_chars AS DOUBLE), 1.0))
-                            * 10))))) AS BIGINT) AS s_e6,
-               CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
-        FROM documents
-"""
 
 
 @query(

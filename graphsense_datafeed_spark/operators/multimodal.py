@@ -39,6 +39,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import hex_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -569,9 +570,7 @@ def multimodal_parse_header(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: narrow, no shuffle; pushes down with the scan."""
     docs = load(spark, sf_dir, "documents")
     h = F.repeat(F.md5(F.col("text").cast("binary")), 4)
-    byte = lambda i: F.conv(  # noqa: E731
-        F.substring(h, i * 2 - 1, 2), 16, 10
-    ).cast("bigint")
+    byte = lambda i: hex_int(h, i * 2 - 1, 2)  # noqa: E731
     xor_fold = byte(9)
     for i in range(10, 17):
         xor_fold = xor_fold.bitwiseXOR(byte(i))
@@ -644,9 +643,7 @@ def multimodal_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.repeat(F.md5(F.col("text").cast("binary")), 4)
     frame_char = lambda fr: F.substring(  # noqa: E731
         F.lit("0123456789abcdef"),
-        (
-            F.conv(F.substring(h, fr * 8 + 1, 8), 16, 10).cast("bigint") % 16
-        ).cast("int")
+        (hex_int(h, fr * 8 + 1, 8) % 16).cast("int")
         + 1,
         1,
     )
@@ -1320,11 +1317,7 @@ def multimodal_payload_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hexpix",
     ).select(
         "doc_id",
-        F.conv(
-            F.substring(F.col("hexpix"), 2 * F.col("i") + 1, 2), 16, 10
-        )
-        .cast("bigint")
-        .alias("b"),
+        hex_int(F.col("hexpix"), 2 * F.col("i") + 1, 2).alias("b"),
     )
     hist = bytes_.groupBy("doc_id", "b").agg(
         F.count("*").cast("bigint").alias("c")
@@ -1536,37 +1529,13 @@ def multimodal_audio_clipping_census(
     idx = F.sequence(F.lit(0), F.lit(63))
     # materialize the pcm array once via transform over the index seq
     media = d.select("doc_id", h.alias("h"))
-    pcm = F.transform(
-        idx,
-        lambda i: F.when(
-            (
-                F.conv(
-                    F.substring(F.col("h"), (i * 4 + 1).cast("int"), 2), 16, 10
-                ).cast("bigint")
-                + 256
-                * F.conv(
-                    F.substring(F.col("h"), (i * 4 + 3).cast("int"), 2), 16, 10
-                ).cast("bigint")
-            )
-            >= 32768,
-            F.conv(
-                F.substring(F.col("h"), (i * 4 + 1).cast("int"), 2), 16, 10
-            ).cast("bigint")
-            + 256
-            * F.conv(
-                F.substring(F.col("h"), (i * 4 + 3).cast("int"), 2), 16, 10
-            ).cast("bigint")
-            - 65536,
-        ).otherwise(
-            F.conv(
-                F.substring(F.col("h"), (i * 4 + 1).cast("int"), 2), 16, 10
-            ).cast("bigint")
-            + 256
-            * F.conv(
-                F.substring(F.col("h"), (i * 4 + 3).cast("int"), 2), 16, 10
-            ).cast("bigint")
-        ),
-    )
+
+    def sample(i):
+        lo = hex_int(F.col("h"), (i * 4 + 1).cast("int"), 2)
+        u = lo + 256 * hex_int(F.col("h"), (i * 4 + 3).cast("int"), 2)
+        return F.when(u >= 32768, u - 65536).otherwise(u)
+
+    pcm = F.transform(idx, sample)
     withpcm = media.select("doc_id", pcm.alias("pcm"))
     absarr = F.transform(F.col("pcm"), lambda s: F.abs(s))
     sumsq = F.aggregate(

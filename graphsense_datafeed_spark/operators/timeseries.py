@@ -22,6 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -5702,22 +5703,7 @@ def events_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster scale the SCALE.md two-level ranking substitutes); the
     cumulative window runs on 10 pre-reduced rows."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("qini:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("qini:"), F.col("user_id").cast("string"), digits=4) % 2
     v_e4 = F.floor(F.col("value") * 10000).cast("bigint")
     peru = ev.groupBy("user_id").agg(
         F.sum(
@@ -8772,22 +8758,7 @@ def events_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-duration tape — the Nelson-Aalen plan with one more
     stratified count riding the same exchange."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("exp42_"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                7,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("exp42_"), F.col("user_id").cast("string"), digits=7) % 2
     peru = ev.groupBy("user_id").agg(
         F.floor(
             (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
@@ -12938,22 +12909,7 @@ def events_mantel_haenszel_or(
     Scale: one events pass to ≤4 stratum cells (map-side), 1-row
     finish — no window, no join."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("arm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("arm:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.select(
         arm.alias("arm"),
         F.when(F.col("value") >= 100.0, 1).otherwise(0).alias("y"),
@@ -13067,22 +13023,7 @@ def events_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one events pass to ≤4 stratum cells, 1-row finish."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("arm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("arm:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.select(
         arm.alias("arm"),
         F.when(F.col("value") >= 100.0, 1).otherwise(0).alias("y"),
@@ -13214,22 +13155,7 @@ def agg_breslow_day_homogeneity(
     Scale: one events pass to ≤4 stratum cells, a 1-row MH anchor,
     1-row finish."""
     ev = load(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("arm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("arm:"), F.col("user_id").cast("string"), digits=4) % 2
     base = ev.select(
         arm.alias("arm"),
         F.when(F.col("value") >= 100.0, 1).otherwise(0).alias("y"),

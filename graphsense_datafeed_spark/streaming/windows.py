@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.schemas import EVENTS_RAW, EVENTS_US
 from graphsense_datafeed_spark.session import ensure_runtime_confs
@@ -906,22 +907,7 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per user per watermark horizon — the stream_dedup posture
     with an md5-derived key downstream."""
     s = read_events_stream(spark, sf_dir)
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("srm:"), F.col("user_id").cast("string")
-                    ).cast("binary")
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
+    arm = md5_int(F.lit("srm:"), F.col("user_id").cast("string"), digits=4) % 2
     dedup = (
         s.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "1 hour")

@@ -1,7 +1,7 @@
 """Whole-registry physical-plan audit — the VERDICT plan review as a
 repeatable tool:
 
-    python /root/repo/scripts/plan_audit.py [qid ...]
+    python scripts/plan_audit.py [qid ...]
 
 Builds (but does NOT execute) every registered batch query at sf0.001
 and scans the formatted physical plan for the scale anti-patterns the
@@ -42,7 +42,8 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("GDS_AUDIT_SF_DIR", "/root/testdata/sf0.001")
 ALLOWLIST_PATH = os.path.join(
@@ -153,14 +154,13 @@ def audit_plan(plan: str) -> dict[str, bool]:
     }
 
 
-def main() -> int:
-    only = set(sys.argv[1:])
+def audited_queries(only: set[str]):
+    """Build, on a bare local session, every registered query the audit
+    covers (all of ``only`` if given), skipping the effectful ones.
+    Yields ``(qid, build)``; ``build()`` returns the query's DataFrame."""
     from pyspark.sql import SparkSession
 
-    from graphsense_datafeed_spark.registry import (
-        QUERIES,
-        load_all_operators,
-    )
+    from graphsense_datafeed_spark.registry import QUERIES, load_all_operators
 
     load_all_operators()
     spark = (
@@ -169,21 +169,25 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", "8")
         .getOrCreate()
     )
-    with open(ALLOWLIST_PATH) as fh:
-        allow = {k: set(v) for k, v in json.load(fh).items()}
-
-    failures: list[tuple[str, str]] = []
-    n_checked = 0
     for qid, fn in QUERIES.items():
         if only and qid not in only:
             continue
         if qid in _EFFECTFUL or qid.startswith(_EFFECTFUL_PREFIXES):
             continue
+        yield qid, lambda fn=fn: fn(spark, SF_DIR)
+
+
+def main() -> int:
+    with open(ALLOWLIST_PATH) as fh:
+        allow = {k: set(v) for k, v in json.load(fh).items()}
+
+    failures: list[tuple[str, str]] = []
+    n_checked = 0
+    for qid, build in audited_queries(set(sys.argv[1:])):
         try:
-            df = fn(spark, SF_DIR)
             buf = io.StringIO()
             with redirect_stdout(buf):
-                df.explain("formatted")
+                build().explain("formatted")
             plan = buf.getvalue()
         except Exception as e:  # effectful query not in the skip list
             failures.append((qid, f"build_error: {e}"))

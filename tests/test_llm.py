@@ -40,8 +40,8 @@ def test_dedup_near_planted_recall(spark):
         [(1, base), (2, variant), (3, unrelated), (4, base)],
         "doc_id bigint, text string",
     )
-    sh = llm_dedup.shingles(docs).persist()
-    cands = llm_dedup.lsh_candidate_pairs(llm_dedup.minhash_signatures_from(sh))
+    sig = llm_dedup.minhash_signatures_from_arrays(llm_dedup.shingle_arrays(docs))
+    cands = llm_dedup.lsh_candidate_pairs(sig)
     pairs = {(r["doc_a"], r["doc_b"]) for r in cands.collect()}
     assert (1, 4) in pairs  # exact dup always collides
     assert (1, 2) in pairs  # near dup (high shingle jaccard)

@@ -354,3 +354,41 @@ def test_ingest_per_currency_keyspace_isolation(spark, tmp_path):
         .collect()
     }
     assert btc_tx and ltc_tx and not (btc_tx & ltc_tx)
+
+
+def test_md5_int_matches_hashlib(spark):
+    """md5_int against Python's md5: hex digits start..start+digits-1
+    of the md5 of the concatenated parts, read base 16."""
+    import hashlib
+
+    import pytest
+
+    from graphsense_datafeed_spark.functions.hashing import md5_int
+
+    def ref(key, start, digits):
+        hexdigest = hashlib.md5(key.encode()).hexdigest()
+        return int(hexdigest[start - 1 : start - 1 + digits], 16)
+
+    keys = [0, 1, 7, 42, 12345, 987654321, -5]
+    k = F.col("k").cast("string")
+    rows = (
+        spark.createDataFrame([(x,) for x in keys], "k bigint")
+        .select(
+            "k",
+            md5_int(F.lit("kmv:"), k, digits=15).alias("salted"),
+            md5_int(k, digits=4).alias("single"),
+            md5_int(k, start=8, digits=7).alias("mid"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(keys)
+    for r in rows:
+        key = str(r["k"])
+        assert r["salted"] == ref("kmv:" + key, 1, 15)
+        assert r["single"] == ref(key, 1, 4)
+        assert r["mid"] == ref(key, 8, 7)
+    for digits in (0, 16):
+        with pytest.raises(ValueError):
+            md5_int(k, digits=digits)
+    with pytest.raises(ValueError):
+        md5_int(k, start=0, digits=4)

@@ -792,6 +792,23 @@ def test_shared_graph_frames_built_once():
     assert not over, over
 
 
+def test_hash_to_int_only_in_hex_int():
+    """The hash-to-integer format (hex slice, base 16 to 10, bigint
+    cast) is written once, in functions.hashing.hex_int; an inline
+    ``F.conv(F.substring(`` anywhere else in the package fails here.
+    Whitespace is ignored, so a re-wrapped copy counts."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "graphsense_datafeed_spark")
+    hits = {}
+    for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        n = "".join(open(p).read().split()).count("F.conv(F.substring(")
+        if n:
+            hits[os.path.relpath(p, pkg)] = n
+    assert hits == {os.path.join("functions", "hashing.py"): 1}, hits
+
+
 def test_streams_start_only_in_drain_stream():
     """Every stream the package runs is started by
     streaming.windows.drain_stream, which scopes the checkpoint manager
