@@ -30,7 +30,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
-from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
+from graphsense_datafeed_spark.ingest.iterate import (
+    checkpoint,
+    iterate,
+    materialize,
+    unrolled_cte,
+)
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.scans import (
     BLOCKS_JSONL,
@@ -593,17 +598,14 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cooccurrence_edges(spark)
     # undirected: propagate both ways
     sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # localCheckpoint each round: iteration grows the logical plan
-    # unboundedly otherwise (round N's plan embeds rounds 1..N-1 —
-    # analysis/codegen eventually blows up; measured). Checkpointing
-    # truncates lineage to the materialized data, the standard
-    # iterative-DataFrame pattern (production: reliable checkpoint dir).
+    # the initial labels are materialized once; label_propagate's
+    # rounds are materialized by iterate (ingest/iterate.py)
     labels = (
         _tx_addresses(spark)
         .select("addr")
         .distinct()
         .select("addr", F.xxhash64("addr").alias("label"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     labels = label_propagate(
         sym, labels, max_iter=50, require_converged=True
@@ -1152,18 +1154,6 @@ def pagerank_iterate(edges, max_iter: int = 10, tol: int = 0, teleport=None):
     return replace(run, state=run.state.select("addr", "rank_e12"))
 
 
-def _edge_fingerprint(e) -> tuple:
-    """Cheap fixpoint probe for an edge DataFrame: (count, xor of row
-    hashes) — one scalar agg, order-insensitive."""
-    row = e.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("src", "dst") % 1000003), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
 def star_contract(edges, max_iter: int = 30):
     """Two-phase star contraction (the large-star/small-star
     MapReduce-CC algorithm): alternating rounds connect every node to
@@ -1173,9 +1163,16 @@ def star_contract(edges, max_iter: int = 30):
     ~6 rounds where min-label propagation needs 63 full edge-set
     shuffles; at 100 TB that round count IS the job cost.
 
+    Runs on ``iterate`` with one large star and one small star per
+    materialization (``pairs=True``).  The fixpoint probe — edge count
+    and an order-insensitive sum of row hashes — is observed on each
+    pair's checkpoint job, not collected separately; the loop ends on
+    the first pair that leaves it unchanged.
+
     ``edges`` is any (src, dst) DataFrame (direction ignored, self
     loops dropped). Returns ``(labels, rounds_run)`` where labels maps
-    every node (addr) to its component minimum (label).
+    every node (addr) to its component minimum (label) and a round is
+    one large+small pair.
     """
 
     def sym(e):
@@ -1185,7 +1182,8 @@ def star_contract(edges, max_iter: int = 30):
             .distinct()
         )
 
-    def star(e, large: bool):
+    def star(e, adj, prev, r):
+        # odd rounds are large stars, even rounds small stars;
         # m(u) = min(N(u) ∪ {u}) over the symmetric neighbor view
         s = sym(e)
         mins = (
@@ -1194,7 +1192,7 @@ def star_contract(edges, max_iter: int = 30):
             .select("src", F.least(F.col("src"), F.col("mn")).alias("m"))
         )
         joined = s.join(mins, "src")
-        if large:
+        if r % 2:
             out = joined.filter(F.col("dst") > F.col("src")).select(
                 F.col("dst").alias("src"), F.col("m").alias("dst")
             )
@@ -1202,25 +1200,25 @@ def star_contract(edges, max_iter: int = 30):
             out = joined.filter(F.col("dst") <= F.col("src")).select(
                 F.col("dst").alias("src"), F.col("m").alias("dst")
             ).union(joined.select("src", F.col("m").alias("dst")))
-        return (
-            out.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-        )
+        return out.filter(F.col("src") != F.col("dst")).distinct()
 
-    nodes = (
-        sym(edges).select(F.col("src").alias("addr")).distinct().localCheckpoint()
+    fingerprint = {
+        "n": F.count("*"),
+        "h": F.coalesce(F.sum(F.xxhash64("src", "dst") % 1000003), F.lit(0)),
+    }
+    nodes = sym(edges).select(F.col("src").alias("addr")).distinct().transform(materialize)
+    e, seen = checkpoint(sym(edges), **fingerprint)
+    last = [seen]
+
+    def unchanged(fp):
+        last.append(fp)
+        return last[-2] == fp
+
+    run = iterate(
+        e, star, 2 * max_iter, scalars=fingerprint, until=unchanged, pairs=True
     )
-    e = sym(edges).localCheckpoint()
-    fp = _edge_fingerprint(e)
-    iters = 0
-    for _ in range(max_iter):
-        iters += 1
-        e = star(star(e, large=True), large=False)
-        new_fp = _edge_fingerprint(e)
-        if new_fp == fp:
-            break
-        fp = new_fp
     # fixpoint is a star forest: every edge points node → component min
-    member_min = e.groupBy("src").agg(F.min("dst").alias("label"))
+    member_min = run.state.groupBy("src").agg(F.min("dst").alias("label"))
     labels = nodes.join(
         member_min, nodes.addr == member_min.src, "left"
     ).select(
@@ -1229,7 +1227,7 @@ def star_contract(edges, max_iter: int = 30):
             F.col("addr"), F.coalesce(F.col("label"), F.col("addr"))
         ).alias("label"),
     )
-    return labels, iters
+    return labels, run.rounds_run // 2
 
 
 @query("graph_components_star", _DUCK_COMPONENTS)
@@ -1544,7 +1542,7 @@ def ingest_entity_cospend(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select("addr")
         .distinct()
         .select("addr", F.col("addr").alias("label"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     labels = label_propagate(
         sym, labels, max_iter=50, require_converged=True

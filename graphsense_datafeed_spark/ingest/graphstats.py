@@ -40,7 +40,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from graphsense_datafeed_spark.functions.hashing import md5_int
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.ingest.facade import _DUCK_BLOCKS, cooccurrence_edges
-from graphsense_datafeed_spark.ingest.iterate import checkpoint, iterate, unrolled_cte
+from graphsense_datafeed_spark.ingest.iterate import (
+    checkpoint,
+    iterate,
+    materialize,
+    unrolled_cte,
+)
 from graphsense_datafeed_spark.sources.scans import read_blocks_json
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -215,7 +220,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full-order tiebreak is a TakeOrderedAndProject, not a sort."""
     # Round-15 (guide §2.4): bip feeds deg AND both self-join sides —
     # checkpoint it so the join+distinct build runs once, not thrice
-    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
+    bip = _copurchase_bipartite(spark, sf_dir).transform(materialize)
     deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
     pairs = _copurchase_pairs(bip)
     da = deg.select(F.col("cust").alias("cust_a"), F.col("d").alias("da"))
@@ -703,7 +708,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight ≈0 anyway, which is the POINT of Adamic–Adar)."""
     # Round-15 (guide §2.4): bip feeds the df-weight agg AND both
     # self-join sides — checkpoint it so the build runs once
-    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
+    bip = _copurchase_bipartite(spark, sf_dir).transform(materialize)
     w = (
         bip.groupBy("part")
         .agg(F.count("*").cast("bigint").alias("dp"))
@@ -778,7 +783,7 @@ def graph_preferential_attachment(spark: SparkSession, sf_dir: str) -> DataFrame
     |customers| rows and joins by key at the candidate-set bound."""
     # Round-15 (guide §2.4): bip feeds deg AND both self-join sides —
     # checkpoint it so the build runs once, not thrice
-    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
+    bip = _copurchase_bipartite(spark, sf_dir).transform(materialize)
     deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
     pairs = _copurchase_pairs(bip)
     da = deg.select(F.col("cust").alias("cust_a"), F.col("d").alias("da"))
@@ -872,7 +877,7 @@ def graph_modularity_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair list runs the expensive generation once.
     labeled = edges.join(F.broadcast(sa), "cust_a").join(
         F.broadcast(sb), "cust_b"
-    ).localCheckpoint()
+    ).transform(materialize)
     m = labeled.agg(F.count("*").cast("bigint").alias("n_edges"))
     deg = (
         labeled.select(F.col("seg_a").alias("seg"))
@@ -947,7 +952,7 @@ def graph_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     are broadcast-sized (|customers| rows of two bigints)."""
     # Round-15 (guide §2.4): bip feeds deg AND both self-join sides —
     # checkpoint it so the build runs once, not thrice
-    bip = _copurchase_bipartite(spark, sf_dir).localCheckpoint()
+    bip = _copurchase_bipartite(spark, sf_dir).transform(materialize)
     deg = bip.groupBy("cust").agg(F.count("*").cast("bigint").alias("d"))
     pairs = _copurchase_pairs(bip)
     da = deg.select(F.col("cust").alias("cust_a"), F.col("d").alias("da"))
@@ -1100,7 +1105,7 @@ def graph_katz_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Round-15 (guide §2.4): pairs feeds both halves of the
         # symmetrized edge list, which the 3-hop message pass then
         # consumes repeatedly — checkpoint the small pair list once
-        .localCheckpoint()
+        .transform(materialize)
     )
     edges = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1367,7 +1372,7 @@ def graph_rich_club_coefficient(
     edges = (
         _copurchase_pairs(_copurchase_bipartite(spark, sf_dir))
         .select(F.col("cust_a").alias("ca"), F.col("cust_b").alias("cb"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     deg = (
         edges.select(F.col("ca").alias("cust"))
@@ -1881,7 +1886,7 @@ def graph_hub_removal_resilience(
     # two anti-joins were no-op re-materializations), and the per-rung
     # fsym checkpoint is gone: label_propagate materializes the
     # adjacency itself.
-    edges = cooccurrence_edges(spark).localCheckpoint()
+    edges = cooccurrence_edges(spark).transform(materialize)
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionAll(
@@ -1889,7 +1894,7 @@ def graph_hub_removal_resilience(
         )
     )
     deg = sym.groupBy("a").agg(F.count("*").cast("bigint").alias("d"))
-    nodes = sym.select("a").distinct().localCheckpoint()
+    nodes = sym.select("a").distinct().transform(materialize)
     frames = []
     for k in _RESILIENCE_KS:
         if k == 0:
@@ -1911,7 +1916,7 @@ def graph_hub_removal_resilience(
             )
         labels = survivors.select(
             F.col("a").alias("addr"), F.col("a").alias("label")
-        ).localCheckpoint()
+        ).transform(materialize)
         labels = label_propagate(
             fsym.select(F.col("a").alias("src"), F.col("b").alias("dst")),
             labels,
@@ -2021,7 +2026,7 @@ def graph_conductance_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut ×2) — checkpoint the small pair list, run the generation once
     labeled = edges.join(F.broadcast(sa), "cust_a").join(
         F.broadcast(sb), "cust_b"
-    ).localCheckpoint()
+    ).transform(materialize)
     m = labeled.agg(F.count("*").cast("bigint").alias("n_edges"))
     deg = (
         labeled.select(F.col("seg_a").alias("seg"))
@@ -2118,7 +2123,7 @@ def graph_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Round-15 (guide §2.4): edges feeds sym twice and sym feeds
         # deg + the nbr join — checkpoint the small pair list so the
         # within-part generation runs once, not four times
-        .localCheckpoint()
+        .transform(materialize)
     )
     sym = edges.select(
         F.col("cust_a").alias("u"), F.col("cust_b").alias("v")

@@ -1,4 +1,15 @@
-"""One iteration primitive for the iterative graph operators.
+"""The package's one materialization module, and the iteration
+primitive built on it.
+
+Every frame the package materializes goes through this module:
+``materialize`` is the one ``localCheckpoint`` call, ``checkpoint``
+adds observed scalars to it, ``cache_adjacency`` is the one
+partition-keeping ``persist`` and ``persist_memo`` the one persist
+that outlives a call (fingerprint-guarded, swept when its session
+stops).  This module decides HOW a frame is materialized; the comment
+at each call site says WHY that frame is (a reused subtree, lineage
+truncation, an observed count).  ``tests/test_plans.py`` fails on a
+raw ``localCheckpoint``/``persist`` anywhere else in the package.
 
 PageRank (plain and personalized), HITS, BFS, k-core peeling and
 min-label propagation share one loop shape — the Pregel / GraphFrames
@@ -20,8 +31,10 @@ that shape:
   plan without losing the reusable partitioning, so the count plays
   AQE's role.  Floor 2, not 1: ``repartition(1, col)`` plans as
   SinglePartition, which EnsureRequirements does not reuse;
-- each round is materialized by ONE ``localCheckpoint`` (which also
-  truncates the otherwise unbounded iterative lineage), and the
+- each round is materialized by ONE ``localCheckpoint``, which also
+  truncates the iterative lineage: without it round N's plan embeds
+  rounds 1..N-1 and analysis/codegen time grows without bound
+  (measured).  The
   round's scalars ride that same job as an ``Observation`` — no
   separate ``collect()``/``count()``/``isEmpty()`` job per round;
 - rounds run in PAIRS (``pairs=True``) where no scalar read back feeds
@@ -67,17 +80,56 @@ HUB_CENSUS_MIN_ROWS = ROWS_PER_PART
 BROADCAST_MAX_ROWS = 200_000
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage (one
+    localCheckpoint).  Chained sites use ``.transform(materialize)``."""
+    return df.localCheckpoint()
+
+
 def checkpoint(df: DataFrame, **scalars) -> tuple[DataFrame, dict]:
-    """Materialize ``df`` with one localCheckpoint.  Each named
-    aggregate Column in ``scalars`` is computed by an Observation on
-    that same job; returns ``(materialized, {name: value})``."""
+    """``materialize(df)``; each named aggregate Column in ``scalars``
+    is computed by an Observation on that same job.  Returns
+    ``(materialized, {name: value})``."""
     if not scalars:
-        return df.localCheckpoint(), {}
+        return materialize(df), {}
     obs = Observation()
-    out = df.observe(
-        obs, *(c.alias(k) for k, c in scalars.items())
-    ).localCheckpoint()
+    out = materialize(df.observe(obs, *(c.alias(k) for k, c in scalars.items())))
     return out, obs.get
+
+
+# persist_memo's entries: (id(session), *key) -> (fingerprint, frame).
+_MEMO: dict[tuple, tuple[str, DataFrame]] = {}
+
+
+def _session_stopped(df: DataFrame) -> bool:
+    try:
+        return df.sparkSession.sparkContext._jsc.sc().isStopped()
+    except Exception:
+        # probe unavailable (e.g. Spark Connect) -> assume LIVE and
+        # keep: dropping a live entry would orphan its persisted data
+        # server-side
+        return False
+
+
+def persist_memo(spark, key: tuple, fingerprint: str, build) -> DataFrame:
+    """Persisted ``build()`` memoized per (session, ``key``), guarded by
+    the source ``fingerprint``: a hit reuses the frame; a miss or a
+    stale fingerprint unpersists the superseded entry and rebuilds.
+    Every miss also drops the entries of STOPPED sessions: a new
+    session gets a new id(), so a dead session's entries could never
+    hit again and would pin their frames (and the session object) for
+    the life of the process."""
+    key = (id(spark), *key)
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    if hit is not None:
+        hit[1].unpersist()
+    for k in [k for k, (_, df) in _MEMO.items() if k != key and _session_stopped(df)]:
+        del _MEMO[k]
+    df = build().persist()
+    _MEMO[key] = (fingerprint, df)
+    return df
 
 
 @dataclass

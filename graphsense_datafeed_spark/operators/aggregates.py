@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
+from graphsense_datafeed_spark.ingest.iterate import iterate, materialize
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -6027,12 +6028,13 @@ def agg_kmeans_1d_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one broadcast of the 2-integer state + one
     map-side-combinable conditional aggregate over the scan —
-    exactly k·iters counters of state; localCheckpoint truncates
-    lineage per round (the graph_hits_bounded shape)."""
+    exactly k·iters counters of state; each round is one ``iterate``
+    materialization, which truncates lineage (the graph_hits_bounded
+    shape)."""
     ev = load(spark, sf_dir, "events")
     base = ev.select(
         F.floor(F.col("value") * 10000).cast("bigint").alias("v")
-    ).localCheckpoint()
+    ).transform(materialize)
     c = base.agg(
         F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY v)")
         .cast("bigint")
@@ -6041,7 +6043,8 @@ def agg_kmeans_1d_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("c2"),
     )
-    for _ in range(_KM1D_ITERS):
+
+    def lloyd(c, adj, prev, r):
         assigned = base.crossJoin(F.broadcast(c)).select(
             "v",
             F.when(
@@ -6052,7 +6055,7 @@ def agg_kmeans_1d_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(2)
             .alias("cl"),
         )
-        c = assigned.agg(
+        return assigned.agg(
             F.floor(
                 F.sum(F.when(F.col("cl") == 1, F.col("v"))).cast("double")
                 / F.count(F.when(F.col("cl") == 1, F.lit(1)))
@@ -6065,7 +6068,9 @@ def agg_kmeans_1d_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("c2"),
-        ).localCheckpoint()
+        )
+
+    c = iterate(c, lloyd, _KM1D_ITERS).state
     final = base.crossJoin(F.broadcast(c))
     near1 = F.abs(F.col("v") - F.col("c1")) <= F.abs(F.col("v") - F.col("c2"))
     return final.groupBy("c1", "c2").agg(
@@ -9576,7 +9581,7 @@ def agg_em_gaussian_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     base = ev.select(
         F.floor(F.col("value") * 10000).cast("bigint").alias("v")
-    ).localCheckpoint()
+    ).transform(materialize)
     stats = base.agg(
         F.count("*").cast("bigint").alias("n"),
         F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY v)")

@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
+from graphsense_datafeed_spark.ingest.iterate import iterate, materialize
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -1779,14 +1780,14 @@ def agg_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = ev.groupBy(
         F.floor(F.hour("ts") / 6).cast("bigint").alias("d"),
         F.col("event_type").alias("t"),
-    ).agg(F.count("*").cast("bigint").alias("n")).localCheckpoint()
+    ).agg(F.count("*").cast("bigint").alias("n")).transform(materialize)
     tot = cells.agg(F.sum("n").cast("bigint").alias("total"))
     colm = cells.groupBy("t").agg(
         (F.sum("n") * s).cast("bigint").alias("c")
     )
-    w = cells.select("d", "t", "n", (F.col("n") * s).cast("bigint").alias("w"))
     dd = lambda c: F.col(c).cast("double")  # noqa: E731
-    for _ in range(_IPF_ITERS):
+
+    def rake(w, adj, prev, r):
         rs = w.groupBy("d").agg(F.sum("w").cast("bigint").alias("sd"))
         w = (
             w.join(rs, "d")
@@ -1803,7 +1804,7 @@ def agg_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         cs = w.groupBy("t").agg(F.sum("w").cast("bigint").alias("st"))
-        w = (
+        return (
             w.join(cs, "t")
             .join(F.broadcast(colm), "t")
             .select(
@@ -1814,8 +1815,13 @@ def agg_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("w"),
             )
-            .localCheckpoint()
         )
+
+    w = iterate(
+        cells.select("d", "t", "n", (F.col("n") * s).cast("bigint").alias("w")),
+        rake,
+        _IPF_ITERS,
+    ).state
     return w.select("d", "t", "n", F.col("w").alias("w_e9")).orderBy("d", "t")
 
 

@@ -25,8 +25,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
+from graphsense_datafeed_spark.ingest.iterate import materialize, persist_memo
 from graphsense_datafeed_spark.registry import query
-from graphsense_datafeed_spark.sources.tables import load
+from graphsense_datafeed_spark.sources.tables import load, path_for, source_fingerprint
 
 
 @query(
@@ -124,52 +125,19 @@ _N_HASHES = 16
 _N_BANDS = 8
 _ROWS_PER_BAND = _N_HASHES // _N_BANDS
 
-# Bounded persist for the fuzzy-dedup pipeline, keyed per
-# (session, sf_dir) with the documents-file fingerprint as the value
-# guard: a regenerated fixture misses and rebuilds (tables.py
-# discipline), an unchanged fixture REUSES — dedup_clusters and
-# dedup_apply nest dedup_near, so one shingle-array build serves all
-# three. Values are (fingerprint, DataFrame); superseded entries are
-# unpersisted on replacement.
-_ARR_CACHE: dict[tuple[int, str], tuple[str, DataFrame]] = {}
 
-
-def _docs_fingerprint(sf_dir: str) -> str:
-    from graphsense_datafeed_spark.sources.tables import (
-        path_for,
-        source_fingerprint,
+def _persisted_shingle_arrays(spark, sf_dir: str, docs: DataFrame) -> DataFrame:
+    """``shingle_arrays(docs)``, persisted once per (session, sf_dir)
+    and guarded by the documents-file fingerprint (``persist_memo``):
+    a regenerated fixture misses and rebuilds (tables.py discipline),
+    an unchanged fixture REUSES — dedup_clusters and dedup_apply nest
+    dedup_near, so one shingle-array build serves all three."""
+    return persist_memo(
+        spark,
+        ("shingle_arrays", sf_dir.rstrip("/")),
+        source_fingerprint(path_for(sf_dir, "documents")),
+        lambda: shingle_arrays(docs),
     )
-
-    return source_fingerprint(path_for(sf_dir, "documents"))
-
-
-def _cached_persist(cache, spark, sf_dir, fp, build):
-    """Fingerprint-guarded persist memo: hit → reuse, miss/stale →
-    unpersist the superseded entry and rebuild. Entries belonging to
-    STOPPED sessions are swept on every miss — a new session gets a
-    new id(), so a dead session's entries could never hit again and
-    would otherwise pin their DataFrames (and the session object) for
-    process lifetime (round-5 code-review find)."""
-    key = (id(spark), sf_dir.rstrip("/"))
-    hit = cache.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        hit[1].unpersist()
-    for k in [k for k in cache if k != key]:
-        df_old = cache[k][1]
-        try:
-            stopped = df_old.sparkSession.sparkContext._jsc.sc().isStopped()
-        except Exception:
-            # probe unavailable (e.g. Spark Connect) → assume LIVE and
-            # keep: popping a live entry would orphan its persisted
-            # data server-side (review find)
-            continue
-        if stopped:
-            cache.pop(k, None)
-    df = build().persist()
-    cache[key] = (fp, df)
-    return df
 
 
 def shingle_arrays(docs: DataFrame) -> DataFrame:
@@ -416,10 +384,7 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nest this pipeline and now reuse the arrays instead of
     # recomputing them, and a regenerated fixture still misses and
     # rebuilds (tables.py discipline).
-    fp = _docs_fingerprint(sf_dir)
-    arrs = _cached_persist(
-        _ARR_CACHE, spark, sf_dir, fp, lambda: shingle_arrays(docs)
-    )
+    arrs = _persisted_shingle_arrays(spark, sf_dir, docs)
     # Signatures are the zero-exchange narrow HOF pass over the
     # persisted arrays (see minhash_signatures); candidate generation
     # rides one reused exchange (see lsh_candidate_pairs).
@@ -998,14 +963,14 @@ def semantic_dedup_frame(
     # sides).
     banded = e.select(
         F.col("vec_id"), F.posexplode(keys).alias("band_id", "band_key")
-    ).localCheckpoint()
+    ).transform(materialize)
     sized = (
         banded.groupBy("band_id", "band_key")
         .agg(F.count("*").alias("n"))
         .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
         .select("band_id", "band_key")
     )
-    pruned = banded.join(sized, ["band_id", "band_key"]).localCheckpoint()
+    pruned = banded.join(sized, ["band_id", "band_key"]).transform(materialize)
     a, b_ = pruned.alias("ka"), pruned.alias("kb")
     cands = (
         a.join(
@@ -1146,13 +1111,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint()
+        .transform(materialize)
     )
     labels = (
         sym.select(F.col("src").alias("addr"))
         .distinct()
         .select("addr", F.col("addr").alias("label"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     # require_converged: the oracle is the FULL recursive closure, so
     # an unconverged label set must raise, not silently hash-mismatch.
@@ -1337,7 +1302,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Generate 10x, which is also why the query was so
         # load-sensitive in-suite. Materialize the deduped digest
         # frame once.
-        .localCheckpoint()
+        .transform(materialize)
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
     df_ = sh.groupBy("h").agg(F.count("*").alias("nd"))
@@ -1345,7 +1310,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = (
         sh.join(df_.filter(F.col("nd") <= 16), "h")
         .select("doc_id", "h")
-        .localCheckpoint()
+        .transform(materialize)
     )
     a = kept.alias("a")
     b = kept.alias("b")
@@ -1996,10 +1961,7 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
-    fp = _docs_fingerprint(sf_dir)
-    arrs = _cached_persist(
-        _ARR_CACHE, spark, sf_dir, fp, lambda: shingle_arrays(docs)
-    )
+    arrs = _persisted_shingle_arrays(spark, sf_dir, docs)
     cands = lsh_candidate_pairs(minhash_signatures_from_arrays(arrs))
     a = arrs.select(
         F.col("doc_id").alias("a_id"),
@@ -2126,10 +2088,7 @@ def dedup_minhash_estimate_error(
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
-    fp = _docs_fingerprint(sf_dir)
-    arrs = _cached_persist(
-        _ARR_CACHE, spark, sf_dir, fp, lambda: shingle_arrays(docs)
-    )
+    arrs = _persisted_shingle_arrays(spark, sf_dir, docs)
     sig = minhash_signatures_from_arrays(arrs)
     cands = lsh_candidate_pairs(sig)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))

@@ -25,9 +25,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
+from graphsense_datafeed_spark.ingest.iterate import iterate, materialize, persist_memo
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.schemas import EMBEDDING_DIM
-from graphsense_datafeed_spark.sources.tables import load
+from graphsense_datafeed_spark.sources.tables import load, path_for, source_fingerprint
 
 
 def dot_product(a, b):
@@ -159,32 +160,25 @@ def lsh_buckets_udf():
     return buckets
 
 
-# The bucket index is reused by both sides of the candidate self-join;
-# persisting it avoids running the projection UDF twice. Bounded: one
-# cached index per sf_dir, the previous one unpersisted on re-build —
-# an unbounded persist here leaked across repeated calls and was
-# measured poisoning long sessions.
-_LSH_INDEX_CACHE: dict[str, DataFrame] = {}
-
-
 def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, table_id, bucket) — the materialized LSH index. At
     100 TB this is the index table you'd write to storage partitioned
-    by (table_id, bucket); here it is a persisted 3-int-column DF."""
-    old = _LSH_INDEX_CACHE.pop(sf_dir, None)
-    if old is not None:
-        old.unpersist()
-    buckets = lsh_buckets_udf()
-    idx = (
-        load(spark, sf_dir, "embeddings")
-        .select(
+    by (table_id, bucket); here it is a 3-int-column DF persisted once
+    per (session, sf_dir) while the embeddings file is unchanged
+    (``persist_memo``): both sides of the candidate self-join, and
+    every later call, reuse it instead of re-running the projection
+    UDF."""
+    return persist_memo(
+        spark,
+        ("lsh_index", sf_dir.rstrip("/")),
+        source_fingerprint(path_for(sf_dir, "embeddings")),
+        lambda: load(spark, sf_dir, "embeddings").select(
             "vec_id",
-            F.posexplode(buckets(F.col("embedding"))).alias("table_id", "bucket"),
-        )
-        .persist()
+            F.posexplode(lsh_buckets_udf()(F.col("embedding"))).alias(
+                "table_id", "bucket"
+            ),
+        ),
     )
-    _LSH_INDEX_CACHE[sf_dir] = idx
-    return idx
 
 
 def _lsh_planes_values() -> str:
@@ -1180,7 +1174,7 @@ def embedding_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = (
         e.join(gate, "vec_id", "left_semi")
         .select("vec_id", "embedding")
-        .localCheckpoint()
+        .transform(materialize)
     )
     removed = semantic_dedup_frame(gated).select("vec_id")
     survivors = gated.join(removed, "vec_id", "left_anti")
@@ -2535,47 +2529,47 @@ def embed_gram_spectral_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gv")
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     d_count = g.select("ra").distinct().count()
     n_vecs = emb.count()
-    v = (
-        g.select("ra")
-        .distinct()
-        .select(
-            F.col("ra").alias("a"),
-            F.lit(s // d_count).cast("bigint").alias("v"),
-        )
-    )
-    for _ in range(_SPEC_NORM_ITERS):
-        # Round-15 (the graph_hits_bounded discipline): checkpoint the
-        # raw matvec ONCE per round — the crossJoin(broadcast(nrm))
-        # form consumed the g⋈v subtree twice (once into the scalar
-        # L1 agg, once as the join left side).  The L1 total is now a
-        # scalar scan of the materialized d-row blocks, folded into
-        # the renormalization as a DOUBLE LITERAL (Python float(t) and
-        # the old bigint→double cast are both correctly-rounded IEEE —
-        # identical division, bit-for-bit).
-        w = (
+
+    def matvec(v):
+        return (
             g.join(v, g.cb == v.a)
             .groupBy("ra")
             .agg(F.sum(F.col("gv") * F.col("v")).cast("bigint").alias("w"))
             .withColumnRenamed("ra", "a")
-            .localCheckpoint()
         )
-        t = w.agg(F.sum(F.abs(F.col("w"))).cast("bigint")).collect()[0][0]
-        v = w.select(
+
+    def renorm(w, t):
+        # the L1 total t arrives observed on w's checkpoint and folds
+        # into the renormalization as a DOUBLE LITERAL (Python float(t)
+        # and a bigint→double cast are both correctly-rounded IEEE —
+        # identical division, bit-for-bit)
+        return w.select(
             "a",
             F.floor(F.col("w").cast("double") * float(s) / float(t))
             .cast("bigint")
             .alias("v"),
         )
-    wf = (
-        g.join(v, g.cb == v.a)
-        .groupBy("ra")
-        .agg(F.sum(F.col("gv") * F.col("v")).cast("bigint").alias("w"))
-        .withColumnRenamed("ra", "a")
+
+    # Each round checkpoints the raw matvec ONCE (the graph_hits_bounded
+    # discipline): a crossJoin(broadcast(norm)) form consumed the g⋈v
+    # subtree twice, once into the scalar L1 agg and once as the join
+    # left side.  Round 1 starts from the uniform vector.
+    v0 = g.select("ra").distinct().select(
+        F.col("ra").alias("a"),
+        F.lit(s // d_count).cast("bigint").alias("v"),
     )
+    run = iterate(
+        v0,
+        lambda f, adj, prev, r: matvec(f if r == 1 else renorm(f, prev["t"])),
+        _SPEC_NORM_ITERS,
+        scalars={"t": F.sum(F.abs(F.col("w"))).cast("bigint")},
+    )
+    v = renorm(run.state, run.metrics[-1]["t"])
+    wf = matvec(v)
     dec = "decimal(38,0)"
     ray = (
         v.join(wf, "a")

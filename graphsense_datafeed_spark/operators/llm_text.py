@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
+from graphsense_datafeed_spark.ingest.iterate import materialize
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -1287,14 +1288,14 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with no subtree reuse — the before-plan re-scanned documents
         # 8x and ran the Generate 8x. Materialize the selected
         # fingerprint set once.
-        .localCheckpoint()
+        .transform(materialize)
     )
     df_ = sel.groupBy("h").agg(F.count("*").alias("nd"))
     # kept feeds both pair-join sides — same discipline.
     kept = (
         sel.join(df_.filter(F.col("nd") <= 16), "h")
         .select("doc_id", "h")
-        .localCheckpoint()
+        .transform(materialize)
     )
     a = kept.alias("a")
     b = kept.alias("b")

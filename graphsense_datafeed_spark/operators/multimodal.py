@@ -40,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import hex_int
+from graphsense_datafeed_spark.ingest.iterate import materialize
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -474,7 +475,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.col("bs"), lambda b: (b * 64 > total).cast("bigint")
         ).alias("bit"),
-    ).localCheckpoint()
+    ).transform(materialize)
     # keyed feeds BOTH candidate-join sides — same discipline (the
     # block-val fold is another interpreted aggregate per row).
     keyed = bits.select(
@@ -489,7 +490,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("bigint"),
             lambda acc, x: acc * 2 + x,
         ).alias("block_val"),
-    ).localCheckpoint()
+    ).transform(materialize)
     a = keyed.select(
         F.col("doc_id").alias("doc_a"), "k", "block_val"
     )

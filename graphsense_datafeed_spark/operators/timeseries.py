@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from graphsense_datafeed_spark.functions.hashing import md5_int
+from graphsense_datafeed_spark.ingest.iterate import iterate, materialize
 from graphsense_datafeed_spark.registry import query
 from graphsense_datafeed_spark.sources.tables import load
 
@@ -5069,12 +5070,12 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("p"),
-    ).localCheckpoint()
+    ).transform(materialize)
     states = p.select(F.col("f").alias("st")).distinct()
     k = states.count()
-    pi = states.select("st", F.lit(s // k).cast("bigint").alias("r"))
-    for _ in range(_MKV_ITERS):
-        pi = (
+
+    def step(pi, adj, prev, r):
+        return (
             p.join(pi.withColumnRenamed("st", "f"), "f")
             .select(
                 F.col("t").alias("st"),
@@ -5088,8 +5089,13 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("st")
             .agg(F.sum("term").cast("bigint").alias("r"))
-            .localCheckpoint()
         )
+
+    pi = iterate(
+        states.select("st", F.lit(s // k).cast("bigint").alias("r")),
+        step,
+        _MKV_ITERS,
+    ).state
     return pi.select("st", "r").select(
         F.col("st").alias("event_type"), F.col("r").alias("pi_e12")
     ).orderBy("event_type")
@@ -6818,7 +6824,7 @@ def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("p"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     q = p.filter(F.col("t") != _ABS_STATE)
     m = p.select(F.col("f").alias("start")).distinct().select(
@@ -6847,7 +6853,7 @@ def events_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("start", "st")
             .agg(F.sum("term").cast("bigint").alias("r"))
-            .localCheckpoint()
+            .transform(materialize)
         )
     last = m.groupBy("start").agg(
         F.sum("r").cast("bigint").alias("s_last")

@@ -25,6 +25,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from graphsense_datafeed_spark.ingest.iterate import persist_memo
 from graphsense_datafeed_spark.schemas import (
     EVENTS_RAW,
     EVENTS_US,
@@ -137,10 +138,8 @@ def normalize_events_ts(df: DataFrame, unit: str) -> DataFrame:
 # in executor memory/disk so repeated queries reuse the columnar scan.
 # The production analog is caching hot dimensions; Spark LRU-evicts
 # under pressure so enabling it is safe at any SF that fits the
-# cluster. Keyed per (session, sf_dir, table, source fingerprint).
-_CACHE: dict[tuple[int, str, str, str], DataFrame] = {}
-
-
+# cluster. Entries live in ingest.iterate's persist_memo, keyed per
+# (session, sf_dir, table) and guarded by the source fingerprint.
 def _cache_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_CACHE", "0") == "1"
 
@@ -158,35 +157,24 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {table!r}; known: {TABLES}")
     path = path_for(sf_dir, table)
-    key = None
-    if _cache_enabled():
-        # fingerprint in the key: a regenerated fixture misses the
-        # cache (same discipline as events_ts_unit / the staged dirs).
-        # Computed ONLY here — with caching off (the default) load()
-        # stays stat-free on the hot path.
-        key = (
-            id(spark),
-            sf_dir.rstrip("/"),
-            table,
-            source_fingerprint(path),
-        )
-        if key in _CACHE:
-            return _CACHE[key]
-    ensure_runtime_confs(spark)
-    if table == "events":
-        unit = events_ts_unit(spark, path)
-        schema = EVENTS_RAW if unit == "ns" else EVENTS_US
-        df = normalize_events_ts(spark.read.schema(schema).parquet(path), unit)
-    else:
-        df = spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
-    if key is not None:
-        # evict superseded entries for the same (session, dir, table):
-        # a regenerated source must not leave the old persist pinned
-        for stale in [k for k in _CACHE if k[:3] == key[:3]]:
-            _CACHE.pop(stale).unpersist()
-        df = df.persist()
-        _CACHE[key] = df
-    return df
+
+    def read() -> DataFrame:
+        ensure_runtime_confs(spark)
+        if table == "events":
+            unit = events_ts_unit(spark, path)
+            schema = EVENTS_RAW if unit == "ns" else EVENTS_US
+            return normalize_events_ts(spark.read.schema(schema).parquet(path), unit)
+        return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
+
+    if not _cache_enabled():
+        return read()
+    # fingerprint guard: a regenerated fixture misses the cache (same
+    # discipline as events_ts_unit / the staged dirs). Computed ONLY
+    # here — with caching off (the default) load() stays stat-free on
+    # the hot path.
+    return persist_memo(
+        spark, ("table", sf_dir.rstrip("/"), table), source_fingerprint(path), read
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,6 +1,6 @@
 """A/B scale measurements for SCALE.md's strongest plan claims.
 
-    python /root/repo/scripts/ab_scale.py [--sf /tmp/sf1] [--reps 3]
+    python scripts/ab_scale.py [--sf /tmp/sf1] [--reps 3]
 
 Two claims were plan-pinned but unmeasured above sf0.1 until round 9:
 
@@ -22,10 +22,12 @@ from __future__ import annotations
 import argparse
 import json
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def timed(fn, reps):

@@ -23,7 +23,7 @@ source files, so one scanner covers both sides):
 Exit 1 on findings outside scripts/chain_lint_allowlist.json (an empty
 allowlist at HEAD is the goal state). Run it from the seal checklist:
 
-    python /root/repo/scripts/chain_lint.py
+    python scripts/chain_lint.py
 """
 
 from __future__ import annotations

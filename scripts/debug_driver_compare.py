@@ -10,9 +10,11 @@ and first differing cells for each engine pair.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 import pandas as pd
@@ -43,7 +45,7 @@ def main() -> int:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", os.path.join(REPO, "__spark_entry__.py")
     )
     entry_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry_mod)

@@ -1,8 +1,8 @@
 """Registry-emitted operator tallies (VERDICT r6 item 7) — the ONE
 place the README/SURVEY headline counts come from:
 
-    python /root/repo/scripts/emit_tallies.py          # check, exit 1 on drift
-    python /root/repo/scripts/emit_tallies.py --write  # rewrite the status lines
+    python scripts/emit_tallies.py          # check, exit 1 on drift
+    python scripts/emit_tallies.py --write  # rewrite the status lines
 
 Round 6 needed two fixup commits because the counts were maintained by
 hand in three places; this generator derives them from the registry
@@ -14,12 +14,14 @@ the suite fails the round the registry and the docs disagree.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-README = "/root/repo/README.md"
-SURVEY = "/root/repo/SURVEY.md"
+README = os.path.join(REPO, "README.md")
+SURVEY = os.path.join(REPO, "SURVEY.md")
 
 
 def counts() -> tuple[int, int]:

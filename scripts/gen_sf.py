@@ -1,6 +1,6 @@
 """Deterministic sf1 (and beyond) fixture generator.
 
-    python /root/repo/scripts/gen_sf.py [--factor 10] [--out /tmp/sf1]
+    python scripts/gen_sf.py [--factor 10] [--out /tmp/sf1]
 
 /root/testdata is read-only and tops out at sf0.1; the scale evidence
 in SCALE.md needs at least one measured decade above that.  This
@@ -36,7 +36,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 

@@ -1,6 +1,6 @@
 """Print the next driver-window ordering mechanically.
 
-    python /root/repo/scripts/next_window.py [--limit N]
+    python scripts/next_window.py [--limit N]
 
 Thin CLI over ``registry.compute_window_order()`` (the executable
 rotation recipe — VERDICT r9 item 4).  Reads every CORRECTNESS_r*.json
@@ -20,9 +20,11 @@ the live registry, so this script is a preview, not a separate recipe.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:

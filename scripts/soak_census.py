@@ -1,6 +1,6 @@
 """Single-session census soak — the round-9 sf1 failure shape, re-run.
 
-    python /root/repo/scripts/soak_census.py [--sf-dir D] [--driver-mem M]
+    python scripts/soak_census.py [--sf-dir D] [--driver-mem M]
                                              [--queries N]
 
 Round 9's sf1 oracle-parity census found that ~55 back-to-back queries
@@ -27,7 +27,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def soak_query_ids(n: int) -> list[str]:

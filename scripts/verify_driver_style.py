@@ -1,10 +1,10 @@
 """Driver-style verification gate — run from ANY directory:
 
-    python /root/repo/scripts/verify_driver_style.py [qid ...]
+    python scripts/verify_driver_style.py [qid ...]
 
 Replicates what the grading driver does (SURVEY §0.1): builds a BARE
 SparkSession (none of the repo's builder confs — loaders must
-self-heal), imports /root/repo/__spark_entry__.py, smoke-runs entry(),
+self-heal), imports the checkout's own __spark_entry__.py, smoke-runs entry(),
 then for every oracle pair runs the Spark query and the DuckDB SQL at
 sf0.01 and compares columns + order-insensitive canonical rows;
 queries without an oracle get the driver's weaker rows-only check.
@@ -17,17 +17,18 @@ a bare session launched outside the repo (round-1 lesson).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
 
-import os
 
 SF_DIR = os.environ.get("GDS_VERIFY_SF_DIR", "/root/testdata/sf0.01")
 
@@ -241,7 +242,7 @@ def _sweep(only, real_err, warn_count) -> int:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", os.path.join(REPO, "__spark_entry__.py")
     )
     entry_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry_mod)

@@ -809,6 +809,29 @@ def test_hash_to_int_only_in_hex_int():
     assert hits == {os.path.join("functions", "hashing.py"): 1}, hits
 
 
+def test_materialize_only_in_iterate():
+    """Every frame the package materializes goes through
+    ingest.iterate (``materialize``/``checkpoint``, ``cache_adjacency``,
+    ``persist_memo``); a ``.localCheckpoint(`` or ``.persist(``
+    anywhere else in the package fails here.  Whitespace is ignored,
+    so a re-wrapped call counts."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "graphsense_datafeed_spark")
+    hits = {}
+    for p in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(p, pkg)
+        if rel == os.path.join("ingest", "iterate.py"):
+            continue
+        text = "".join(open(p).read().split())
+        for call in (".localCheckpoint(", ".persist("):
+            n = text.count(call)
+            if n:
+                hits[(rel, call)] = n
+    assert not hits, hits
+
+
 def test_streams_start_only_in_drain_stream():
     """Every stream the package runs is started by
     streaming.windows.drain_stream, which scopes the checkpoint manager

@@ -103,7 +103,6 @@ def test_pq_codebooks_are_corpus_slices(spark):
     DuckDB oracle state them as data rows."""
     import numpy as np
 
-    from graphsense_datafeed_spark.operators.llm_dedup import _ARR_CACHE  # noqa: F401
     from graphsense_datafeed_spark.operators.llm_similarity import (
         _PQ_K,
         _PQ_M,
