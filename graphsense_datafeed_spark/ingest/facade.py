@@ -598,8 +598,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cooccurrence_edges(spark)
     # undirected: propagate both ways
     sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # the initial labels are materialized once; label_propagate's
-    # rounds are materialized by iterate (ingest/iterate.py)
+    # materialized once: the initial labels feed both the adjacency's
+    # self-loops and round 1's state in label_propagate
     labels = (
         _tx_addresses(spark)
         .select("addr")
@@ -1206,7 +1206,9 @@ def star_contract(edges, max_iter: int = 30):
         "n": F.count("*"),
         "h": F.coalesce(F.sum(F.xxhash64("src", "dst") % 1000003), F.lit(0)),
     }
-    nodes = sym(edges).select(F.col("src").alias("addr")).distinct().transform(materialize)
+    nodes = (
+        sym(edges).select(F.col("src").alias("addr")).distinct().transform(materialize)
+    )
     e, seen = checkpoint(sym(edges), **fingerprint)
     last = [seen]
 
