@@ -103,7 +103,9 @@ _MEMO: dict[tuple, tuple[str, DataFrame]] = {}
 
 def _session_stopped(df: DataFrame) -> bool:
     try:
-        return df.sparkSession.sparkContext._jsc.sc().isStopped()
+        # SparkContext.stop() drops its JVM handle (``_jsc = None``)
+        jsc = df.sparkSession.sparkContext._jsc
+        return jsc is None or jsc.sc().isStopped()
     except Exception:
         # probe unavailable (e.g. Spark Connect) -> assume LIVE and
         # keep: dropping a live entry would orphan its persisted data

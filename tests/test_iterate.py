@@ -147,16 +147,14 @@ def test_until_and_rounds_run(spark):
 
 def test_hot_table_cache_drops_stopped_sessions(spark, sf_dir, monkeypatch):
     """tables.load's opt-in cache keeps its entries in persist_memo: an
-    entry whose session reports stopped is gone after the next miss (a
+    entry whose session was stopped is gone after the next miss (a
     dead session's id never hits again, so the entry would pin its
     frame and session for the life of the process), and a live
     session's entry still hits."""
     monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
-    stopped = SimpleNamespace(isStopped=lambda: True)
+    # what SparkContext.stop() leaves behind: the JVM handle is None
     dead_frame = SimpleNamespace(
-        sparkSession=SimpleNamespace(
-            sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=lambda: stopped))
-        )
+        sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
     )
     memo = iterate_module._MEMO
     dead = (-1, "table", sf_dir, "region")

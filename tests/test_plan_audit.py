@@ -5,7 +5,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
 
 from plan_audit import ALLOWLIST_PATH, audit_plan  # noqa: E402
 

@@ -2,6 +2,8 @@
 the mann-whitney invariants after the window removal, and the
 two-level equidepth decomposition vs a direct NTILE readout."""
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -258,7 +260,12 @@ def test_doc_tallies_match_registry():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "emit_tallies", "/root/repo/scripts/emit_tallies.py"
+        "emit_tallies",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts",
+            "emit_tallies.py",
+        ),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

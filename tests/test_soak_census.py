@@ -10,7 +10,11 @@ it cannot be healed onto a running session).
 
 from __future__ import annotations
 
+import os
+
 from graphsense_datafeed_spark.session import BUILDER_CONFS
+
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 
 
 def test_periodic_gc_builder_conf():
@@ -21,7 +25,7 @@ def test_periodic_gc_builder_conf():
 def test_soak_panel_shape():
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from soak_census import soak_query_ids
 
     panel = soak_query_ids(55)
@@ -36,7 +40,7 @@ def test_soak_panel_shape():
 def test_soak_panel_all_registered():
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from soak_census import soak_query_ids
 
     from graphsense_datafeed_spark import registry
